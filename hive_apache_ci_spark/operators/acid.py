@@ -40,6 +40,14 @@ public API only:
   (writers wait instead of burning retries); the hard-link publish
   remains the only commit arbiter, so correctness never depends on it.
 
+One implementation: the unit of all of the above is the CHAIN, a
+``{base, base_seq, deltas}`` entry with root-relative dir paths.
+AcidTable defines create/commit, compaction, vacuum and merge-on-read
+once over a map of partition value → chain; the flat manifest is the
+one-chain case, and PartitionedAcidTable (one chain per partition dir,
+as in Hive) adds only its partition layout: the ``partitionBy`` staging
+write, its manifest ↔ chain mapping and ``read(partition=…)`` pruning.
+
 Scale notes: deltas are mutation-sized, not table-sized; the read path is
 UNION ALL + one row_number window partitioned BY KEY (hash-distributed,
 never a global window). At 100 TB the base is partitioned and compaction
@@ -50,11 +58,14 @@ from __future__ import annotations
 
 import json
 import os
+import posixpath
 import re
 import uuid
+from functools import reduce
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..helpers import T, committed, run_scratch
 from ..registry import query
@@ -375,7 +386,16 @@ class AcidTable:
 
     ``cols`` is the table schema (column names), ``key`` the merge key
     (defaults: the customer-shaped demo schema used by the acid_*
-    queries; the streaming-ingest query uses its own)."""
+    queries; the streaming-ingest query uses its own).
+
+    Every write, compaction, vacuum and read below runs over a map of
+    partition value → CHAIN, a ``{base, base_seq, deltas}`` entry whose
+    dir paths are relative to the table root. The flat manifest is one
+    chain (keyed ``""``, dirs at the root); PartitionedAcidTable maps its
+    manifest to one chain per partition dir and reuses all of it."""
+
+    #: partition column (None: the flat, one-chain table)
+    part: str | None = None
 
     def __init__(self, root: str, cols=None, key: str | None = None):
         self.root = root
@@ -452,6 +472,16 @@ class AcidTable:
         finally:
             os.close(dfd)
 
+    # -- manifest <-> chain map -------------------------------------------
+
+    def _chains(self, m: dict) -> dict[str, dict]:
+        """The manifest's chains as a fresh map (callers replace entries,
+        never mutate them). The flat manifest IS one chain."""
+        return {"": {k: m[k] for k in ("base", "base_seq", "deltas")}}
+
+    def _manifest_for(self, version: int, chains: dict[str, dict]) -> dict:
+        return {"version": version, **chains[""]}
+
     # -- transactions: automatic retry loop (round 10) --------------------
 
     def commit_transaction(self, spark, txn_fn, max_retries: int = 5,
@@ -507,14 +537,35 @@ class AcidTable:
 
     # -- writes ----------------------------------------------------------
 
-    def create(self, df) -> None:
-        """v0: initial base snapshot."""
-        d = os.path.join(self.root, "base_0")
-        df.select(*self.cols).write.mode("errorifexists").parquet(d)
+    def _write_dir(self, df, rel: str) -> str:
+        """Write ``df`` as the _SUCCESS-gated, fsynced data dir ``rel``
+        (relative to the root) — fsynced BEFORE any manifest names it."""
+        d = os.path.join(self.root, rel)
+        df.write.mode("errorifexists").parquet(d)
         _fsync_dir_entries(committed(d))
-        self._commit(
-            {"version": 0, "base": "base_0", "base_seq": 0, "deltas": []}
+        return rel
+
+    def _stage(self, df, version: int, kind: str, with_op: bool) -> dict:
+        """Write one commit's rows as data dirs; returns {chain key: dir
+        relpath}. Flat: one root-level dir. ``base_0`` has a fixed name
+        (a second ``create`` fails on it); every later dir is
+        writer-unique, because the manifest slot link is the ONLY commit
+        arbiter — a losing concurrent writer leaves an orphan data dir
+        that no manifest references (vacuum collects it)."""
+        cols = self.cols + (["_op"] if with_op else [])
+        dname = (
+            "base_0" if version == 0
+            else f"{kind}_{version}_{uuid.uuid4().hex[:8]}"
         )
+        return {"": self._write_dir(df.select(*cols), dname)}
+
+    def create(self, df) -> None:
+        """v0: initial base snapshot (one chain per staged dir)."""
+        dirs = self._stage(df, 0, "base", with_op=False)
+        self._commit(self._manifest_for(0, {
+            pv: {"base": d, "base_seq": 0, "deltas": []}
+            for pv, d in dirs.items()
+        }))
 
     def commit_delta(self, delta_df, read_version: int | None = None) -> int:
         """One transaction: U/D/I event rows (full row image + _op).
@@ -549,54 +600,69 @@ class AcidTable:
             )
         m = self.manifest(read_version)
         v = m["version"] + 1
-        # writer-unique data dir: the manifest slot link is the ONLY
-        # commit arbiter — a losing concurrent writer leaves an orphan
-        # data dir that no manifest references (harmless; GC'd with the
-        # table)
-        dname = f"delta_{v}_{uuid.uuid4().hex[:8]}"
-        d = os.path.join(self.root, dname)
-        delta_df.select(*self.cols, "_op").write.mode("errorifexists").parquet(d)
-        _fsync_dir_entries(committed(d))
-        m = {
-            "version": v,
-            "base": m["base"],
-            "base_seq": m["base_seq"],
-            "deltas": m["deltas"] + [[v, dname]],
-        }
-        self._commit(m)
+        chains = self._chains(m)
+        for pv, d in self._stage(delta_df, v, "delta", with_op=True).items():
+            # a delta for an unseen partition value creates the partition
+            # (base=None — Hive's dynamic-partition insert)
+            c = chains.get(pv, {"base": None, "base_seq": -1, "deltas": []})
+            chains[pv] = {**c, "deltas": c["deltas"] + [[v, d]]}
+        self._commit(self._manifest_for(v, chains))
         return v
 
-    def compact(self, spark) -> int:
-        """Major compaction: rewrite the current snapshot as a new base,
-        commit an empty delta chain. State-preserving by construction
-        (and oracled by acid_compaction_equivalence)."""
+    def compact(self, spark):
+        """Major compaction (Hive's compactor, one task per dirty chain):
+        rewrite each chain with live deltas as a new base with an empty
+        delta chain, in the chain's own dir; clean chains keep their base
+        dir UNREWRITTEN. State-preserving by construction (oracled by
+        acid_compaction_equivalence / acid_partition_compaction). Commits
+        nothing when no chain has live deltas.
+
+        Returns the resulting version (flat table) or the sorted
+        compacted partition values (partitioned table)."""
         m = self.manifest()
         v = m["version"] + 1
-        snap = self.read(spark)
-        dname = f"base_{v}_{uuid.uuid4().hex[:8]}"
-        d = os.path.join(self.root, dname)
-        snap.write.mode("errorifexists").parquet(d)
-        _fsync_dir_entries(committed(d))
-        self._commit(
-            {"version": v, "base": dname, "base_seq": v, "deltas": []}
-        )
-        return v
+        chains = self._chains(m)
+        compacted = []
+        for pv in sorted(chains):
+            c = chains[pv]
+            if not c["deltas"]:
+                continue  # clean chain: zero I/O, manifest ref carried
+            # a chain's dirs share one home: the root or its partition dir
+            home = posixpath.dirname(c["deltas"][0][1])
+            dname = f"base_{v}_{uuid.uuid4().hex[:8]}"
+            chains[pv] = {
+                "base": self._write_dir(
+                    self._read_chain(spark, c), posixpath.join(home, dname)
+                ),
+                "base_seq": v,
+                "deltas": [],
+            }
+            compacted.append(pv)
+        if compacted:
+            self._commit(self._manifest_for(v, chains))
+        else:
+            v = m["version"]
+        return v if self.part is None else compacted
 
     def vacuum(self, retain_versions: int = 1) -> list[str]:
         """GC unreferenced data dirs (Delta VACUUM / Hive cleaner-thread
-        role): keep every dir referenced by the newest ``retain_versions``
-        manifests, delete the rest — replaced bases, superseded deltas,
-        and orphans from losing concurrent writers. Time travel older
-        than the retention horizon stops working (by design — exactly
-        Delta's contract); the manifests themselves stay, so a
+        role): keep every dir referenced by a chain of the newest
+        ``retain_versions`` manifests, delete the rest — replaced bases,
+        superseded deltas, orphans from losing concurrent writers, and
+        ``.stage_*`` dirs of writers that crashed mid-stage. Time travel
+        older than the retention horizon stops working (by design —
+        exactly Delta's contract); the manifests themselves stay, so a
         too-old read fails with a clear missing-dir error rather than
-        serving partial data. Returns the deleted dir names.
+        serving partial data. Returns the deleted dir relpaths.
 
         Safety rails (r9 ADVICE): ``retain_versions >= 1`` is enforced
         (0 would compute an empty keep-set and delete the CURRENT base),
-        and only dirs matching the ``base_*``/``delta_*`` data-dir naming
-        are eligible — co-located non-table dirs (streaming checkpoints,
-        staged chunks) are never touched."""
+        and only ``base_*``/``delta_*`` data dirs at the root or in a
+        ``{part}={val}`` partition dir are eligible — co-located
+        non-table dirs (streaming checkpoints, staged chunks) are never
+        touched. Like vacuuming an in-flight writer's un-published data
+        dir, collecting ``.stage_*`` assumes no concurrent in-flight
+        commit on this table."""
         import shutil
 
         if retain_versions < 1:
@@ -607,49 +673,77 @@ class AcidTable:
         latest = self.latest_version()
         keep: set[str] = set()
         for v in range(max(0, latest - retain_versions + 1), latest + 1):
-            m = self.manifest(v)
-            keep.add(m["base"])
-            keep.update(dname for _, dname in m["deltas"])
+            for c in self._chains(self.manifest(v)).values():
+                keep.add(c["base"])
+                keep.update(d for _, d in c["deltas"])
+
+        def candidates():
+            for entry in os.listdir(self.root):
+                if entry.startswith((".stage_", "base_", "delta_")):
+                    yield entry
+                elif "=" in entry and os.path.isdir(
+                    os.path.join(self.root, entry)
+                ):
+                    for sub in os.listdir(os.path.join(self.root, entry)):
+                        if sub.startswith(("base_", "delta_")):
+                            yield f"{entry}/{sub}"
+
         deleted = []
-        for entry in os.listdir(self.root):
-            full = os.path.join(self.root, entry)
-            if not os.path.isdir(full):
-                continue
-            if not (entry.startswith("base_") or entry.startswith("delta_")):
-                continue  # not a table data dir — never vacuum's business
-            if entry not in keep:
+        for rel in candidates():
+            full = os.path.join(self.root, rel)
+            if os.path.isdir(full) and rel not in keep:
                 shutil.rmtree(full, ignore_errors=True)
-                deleted.append(entry)
+                deleted.append(rel)
         return sorted(deleted)
 
     # -- merge-on-read ---------------------------------------------------
 
-    def read(self, spark, version: int | None = None):
-        """Snapshot read (``VERSION AS OF`` when version is given): base
-        UNION deltas, latest seq per key wins, deletes drop out."""
-        m = self.manifest(version)
-        base = spark.read.parquet(
-            committed(os.path.join(self.root, m["base"]))
-        ).select(*self.cols)
-        if not m["deltas"]:
-            # compacted (or fresh) snapshot: the base IS the state — plain
-            # scan, no merge window (what compaction buys at read time)
-            return base
-        cur = base.withColumn("_op", F.lit("I")).withColumn(
-            "_seq", F.lit(m["base_seq"])
-        )
-        for seq, dname in m["deltas"]:
-            d = (
-                spark.read.parquet(committed(os.path.join(self.root, dname)))
-                .select(*self.cols, "_op")
-                .withColumn("_seq", F.lit(seq))
+    def _read_chain(self, spark, c: dict):
+        """Merge-on-read of one chain: base rows carry seq = base_seq,
+        delta rows their commit's seq; latest seq per key wins, 'D' rows
+        drop out — one hash shuffle on the key, never a global window. A
+        chain without deltas is a plain base scan, no merge window (what
+        compaction buys at read time)."""
+        def scan(rel, cols):
+            return spark.read.parquet(
+                committed(os.path.join(self.root, rel))
+            ).select(*cols)
+
+        srcs = []
+        if c["base"] is not None:
+            base = scan(c["base"], self.cols)
+            if not c["deltas"]:
+                return base
+            srcs.append(
+                base.withColumn("_op", F.lit("I")).withColumn(
+                    "_seq", F.lit(c["base_seq"])
+                )
             )
-            cur = cur.unionByName(d)
+        srcs += [
+            scan(d, self.cols + ["_op"]).withColumn("_seq", F.lit(seq))
+            for seq, d in c["deltas"]
+        ]
         w = Window.partitionBy(self.key).orderBy(F.col("_seq").desc())
         return (
-            cur.withColumn("_rn", F.row_number().over(w))
+            reduce(DataFrame.unionByName, srcs)
+            .withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & (F.col("_op") != "D"))
             .select(*self.cols)
+        )
+
+    def read(self, spark, version: int | None = None):
+        """Snapshot read (``VERSION AS OF`` when version is given): UNION
+        ALL of every chain of that manifest, each merged on read. No
+        chains (a partitioned table created from zero rows) reads as an
+        empty DataFrame with the table's columns."""
+        chains = self._chains(self.manifest(version))
+        if not chains:
+            return spark.createDataFrame(
+                [], StructType([StructField(c, StringType()) for c in self.cols])
+            )
+        return reduce(
+            DataFrame.unionByName,
+            (self._read_chain(spark, chains[pv]) for pv in sorted(chains)),
         )
 
 
@@ -657,18 +751,22 @@ def _null_str():
     return F.lit(None).cast("string")
 
 
-def _build_demo_table(spark, sf_dir: str, name: str) -> AcidTable:
-    """v0 create → v1 UPDATE → v2 DELETE → v3 MERGE, all derived
-    deterministically from the customer table (so DuckDB can replay every
-    version). Per-run scratch path (scratch discipline)."""
-    tbl = AcidTable(run_scratch("acid", sf_dir, name))
-    base = T(spark, sf_dir, "customer").select(
+def _demo_base(spark, sf_dir: str):
+    """v0 of every customer-shaped demo table: balances rounded to cents."""
+    return T(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
         F.round(F.col("c_acctbal"), 2).alias("c_acctbal"),
         "c_mktsegment",
     )
-    tbl.create(base)
+
+
+def _build_demo_table(spark, sf_dir: str, name: str) -> AcidTable:
+    """v0 create → v1 UPDATE → v2 DELETE → v3 MERGE, all derived
+    deterministically from the customer table (so DuckDB can replay every
+    version). Per-run scratch path (scratch discipline)."""
+    tbl = AcidTable(run_scratch("acid", sf_dir, name))
+    tbl.create(_demo_base(spark, sf_dir))
     # v1 — UPDATE: 10% balance bump for every 5th customer
     v0 = tbl.read(spark)
     upd = v0.filter(F.col("c_custkey") % 5 == 0).select(
@@ -806,21 +904,16 @@ def acid_version_as_of(spark, sf_dir):
     invisible). Emits (version, row count, exact-DECIMAL balance total);
     the oracle recomputes each version's state independently."""
     tbl = _build_demo_table(spark, sf_dir, "version_as_of")
-    outs = []
-    for v in range(tbl.latest_version() + 1):
-        outs.append(
-            tbl.read(spark, version=v).agg(
-                F.lit(v).cast("int").alias("version"),
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_bal"),
-            ).select("version", "n_rows", "total_bal")
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    res = res.localCheckpoint()
+    res = reduce(DataFrame.unionByName, (
+        tbl.read(spark, version=v).agg(
+            F.lit(v).cast("int").alias("version"),
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_bal"),
+        ).select("version", "n_rows", "total_bal")
+        for v in range(tbl.latest_version() + 1)
+    )).localCheckpoint()
     import shutil
 
     shutil.rmtree(tbl.root, ignore_errors=True)
@@ -941,24 +1034,17 @@ def stream_acid_ingest_history(spark, sf_dir):
     finally:
         q.stop()
 
-    outs = []
-    for v in range(tbl.latest_version() + 1):
-        outs.append(
-            tbl.read(spark, version=v).agg(
-                F.lit(v).cast("int").alias("version"),
-                F.count(F.lit(1)).cast("bigint").alias("n_users"),
-                F.coalesce(F.sum("n_events"), F.lit(0))
-                .cast("bigint")
-                .alias("n_events"),
-            ).select("version", "n_users", "n_events")
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    res = res.localCheckpoint()
-    import shutil as _sh
-
-    _sh.rmtree(base, ignore_errors=True)
+    res = reduce(DataFrame.unionByName, (
+        tbl.read(spark, version=v).agg(
+            F.lit(v).cast("int").alias("version"),
+            F.count(F.lit(1)).cast("bigint").alias("n_users"),
+            F.coalesce(F.sum("n_events"), F.lit(0))
+            .cast("bigint")
+            .alias("n_events"),
+        ).select("version", "n_users", "n_events")
+        for v in range(tbl.latest_version() + 1)
+    )).localCheckpoint()
+    shutil.rmtree(base, ignore_errors=True)
     return res
 
 
@@ -975,19 +1061,25 @@ class PartitionedAcidTable(AcidTable):
     metadata/Partition.class, txn/compactor/Initiator.class]`` — Hive's
     Initiator enqueues one compaction task per dirty partition.
 
-    Layout mirrors Hive exactly: data files do NOT carry rows of other
-    partitions; each commit stages ONE ``partitionBy`` write (a single
-    Spark job regardless of how many partitions the delta touches — the
-    dynamic-partition insert path) whose subdirs are then published as
-    per-partition data dirs. The manifest maps partition value →
-    {base, base_seq, deltas}; a delta targeting a brand-new partition
-    value creates the partition (base=None, Hive dynamic-partition
-    semantics). Partition values are dir-name strings, like Hive's.
+    The chain logic — commit, duplicate-key guard, compaction, vacuum,
+    merge-on-read — is AcidTable's, unchanged; an unpartitioned table is
+    simply the one-chain case. What is partition-specific lives here:
 
-    ``read(partition=val)`` resolves ONLY that partition's chain, so the
-    scan lists one partition dir — metastore-style partition pruning by
-    construction (gated: every inputFile must live under the partition
-    dir; tests/test_plans.py + the in-query audit below)."""
+    - the ``part`` column;
+    - staging: each commit stages ONE ``partitionBy`` write (a single
+      Spark job regardless of how many partitions the delta touches —
+      the dynamic-partition insert path) whose subdirs are then
+      published as per-partition data dirs, so data files never carry
+      rows of other partitions;
+    - the manifest ↔ chain map: ``{"version", "partitions": {partition
+      value: chain}}``. Partition values are dir-name strings, like
+      Hive's; a delta targeting a brand-new value creates the partition
+      (base=None, Hive dynamic-partition semantics);
+    - ``read(partition=val)``: resolves ONLY that partition's chain, so
+      the scan lists one partition dir — metastore-style partition
+      pruning by construction (gated: every inputFile must live under
+      the partition dir; tests/test_plans.py + the in-query audit
+      below)."""
 
     def __init__(self, root: str, cols=None, key: str | None = None,
                  part: str | None = None):
@@ -996,7 +1088,11 @@ class PartitionedAcidTable(AcidTable):
         if self.part not in self.cols:
             raise ValueError(f"partition column {self.part} not in schema")
 
-    # -- staging: one partitionBy job per commit --------------------------
+    def _chains(self, m: dict) -> dict[str, dict]:
+        return dict(m["partitions"])
+
+    def _manifest_for(self, version: int, chains: dict[str, dict]) -> dict:
+        return {"version": version, "partitions": chains}
 
     def _stage(self, df, version: int, kind: str, with_op: bool) -> dict:
         """Write df once with ``partitionBy``, then publish each partition
@@ -1046,169 +1142,21 @@ class PartitionedAcidTable(AcidTable):
             # crash mid-stage still leaks, which vacuum() GCs (r10 ADVICE)
             shutil.rmtree(stage, ignore_errors=True)
 
-    # -- commit protocol over per-partition chains ------------------------
-
-    def create(self, df) -> None:
-        dirs = self._stage(df, 0, "base", with_op=False)
-        self._commit({
-            "version": 0,
-            "partitions": {
-                v: {"base": d, "base_seq": 0, "deltas": []}
-                for v, d in dirs.items()
-            },
-        })
-
-    def commit_delta(self, delta_df, read_version: int | None = None) -> int:
-        dup = (
-            delta_df.groupBy(self.key)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"delta has multiple events for key {dup[0][0]}; "
-                "one event per key per transaction"
-            )
-        m = self.manifest(read_version)
-        v = m["version"] + 1
-        dirs = self._stage(delta_df, v, "delta", with_op=True)
-        parts = {pv: dict(e) for pv, e in m["partitions"].items()}
-        for val, dname in dirs.items():
-            e = parts.get(val)
-            if e is None:  # dynamic-partition insert: partition is born here
-                e = {"base": None, "base_seq": -1, "deltas": []}
-            e = dict(e)
-            e["deltas"] = list(e["deltas"]) + [[v, dname]]
-            parts[val] = e
-        self._commit({"version": v, "partitions": parts})
-        return v
-
-    def compact(self, spark) -> list[str]:
-        """Partition-scoped major compaction: rewrite ONLY partitions with
-        live deltas (one per-partition job — Hive's compactor queue);
-        clean partitions keep their existing base dir UNREWRITTEN in the
-        new manifest. Returns the compacted partition values."""
-        m = self.manifest()
-        v = m["version"] + 1
-        parts = {pv: dict(e) for pv, e in m["partitions"].items()}
-        compacted = []
-        for pv in sorted(parts):
-            e = parts[pv]
-            if not e["deltas"]:
-                continue  # clean partition: zero I/O, manifest ref carried
-            snap = self._read_partition(spark, e)
-            pdir = f"{self.part}={pv}"
-            dname = f"base_{v}_{uuid.uuid4().hex[:8]}"
-            d = os.path.join(self.root, pdir, dname)
-            snap.write.mode("errorifexists").parquet(d)
-            _fsync_dir_entries(committed(d))
-            parts[pv] = {"base": f"{pdir}/{dname}", "base_seq": v, "deltas": []}
-            compacted.append(pv)
-        if compacted:
-            self._commit({"version": v, "partitions": parts})
-        return compacted
-
-    def vacuum(self, retain_versions: int = 1) -> list[str]:
-        """Per-partition GC with the same rails as the flat table: only
-        ``base_*``/``delta_*`` dirs under ``{part}={val}`` partition dirs
-        are eligible; keep-set is the union over retained manifests."""
-        import shutil
-
-        if retain_versions < 1:
-            raise ValueError(
-                f"retain_versions must be >= 1 (got {retain_versions}); "
-                "0 would vacuum the live snapshot itself"
-            )
-        latest = self.latest_version()
-        keep: set[str] = set()
-        for v in range(max(0, latest - retain_versions + 1), latest + 1):
-            for e in self.manifest(v)["partitions"].values():
-                if e["base"]:
-                    keep.add(e["base"])
-                keep.update(d for _, d in e["deltas"])
-        deleted = []
-        for pdir in os.listdir(self.root):
-            full = os.path.join(self.root, pdir)
-            if not os.path.isdir(full):
-                continue
-            if pdir.startswith(".stage_"):
-                # orphaned staging dir from a writer that crashed mid-
-                # _stage (r10 ADVICE: these have no '=' so the partition
-                # walk never collected them). Same caveat as vacuuming an
-                # in-flight writer's un-published base_*: vacuum assumes
-                # no concurrent in-flight commit on this table.
-                shutil.rmtree(full, ignore_errors=True)
-                deleted.append(pdir)
-                continue
-            if "=" not in pdir:
-                continue
-            for entry in os.listdir(full):
-                rel = f"{pdir}/{entry}"
-                sub = os.path.join(full, entry)
-                if not os.path.isdir(sub):
-                    continue
-                if not entry.startswith(("base_", "delta_")):
-                    continue
-                if rel not in keep:
-                    shutil.rmtree(sub, ignore_errors=True)
-                    deleted.append(rel)
-        return sorted(deleted)
-
-    # -- merge-on-read, partition-pruned ----------------------------------
-
-    def _read_partition(self, spark, e):
-        srcs = []
-        if e["base"] is not None:
-            base = spark.read.parquet(
-                committed(os.path.join(self.root, e["base"]))
-            ).select(*self.cols)
-            if not e["deltas"]:
-                return base  # compacted partition: plain scan, no window
-            srcs.append(
-                base.withColumn("_op", F.lit("I")).withColumn(
-                    "_seq", F.lit(e["base_seq"])
-                )
-            )
-        for seq, dname in e["deltas"]:
-            srcs.append(
-                spark.read.parquet(committed(os.path.join(self.root, dname)))
-                .select(*self.cols, "_op")
-                .withColumn("_seq", F.lit(seq))
-            )
-        cur = srcs[0]
-        for s in srcs[1:]:
-            cur = cur.unionByName(s)
-        w = Window.partitionBy(self.key).orderBy(F.col("_seq").desc())
-        return (
-            cur.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col("_op") != "D"))
-            .select(*self.cols)
-        )
-
     def read(self, spark, version: int | None = None,
              partition: str | None = None):
         """Snapshot read; ``partition=val`` prunes to ONE partition chain
         (the scan never lists any other partition dir). ``partition`` is
         the RAW value; the lookup escapes it to the manifest's dir-name
         key form."""
+        if partition is None:
+            return super().read(spark, version)
         m = self.manifest(version)
-        parts = m["partitions"]
-        if partition is not None:
-            esc = escape_partition_value(str(partition))
-            if esc not in parts:
-                raise KeyError(
-                    f"no partition {self.part}={partition} at v{m['version']}"
-                )
-            sel = [parts[esc]]
-        else:
-            sel = [parts[pv] for pv in sorted(parts)]
-        outs = [self._read_partition(spark, e) for e in sel]
-        res = outs[0]
-        for o in outs[1:]:
-            res = res.unionByName(o)
-        return res
+        esc = escape_partition_value(str(partition))
+        if esc not in m["partitions"]:
+            raise KeyError(
+                f"no partition {self.part}={partition} at v{m['version']}"
+            )
+        return self._read_chain(spark, m["partitions"][esc])
 
 
 #: Segments whose chains receive deltas in the partitioned demo (v1 touches
@@ -1226,13 +1174,7 @@ def _build_partitioned_table(spark, sf_dir: str, name: str):
     tbl = PartitionedAcidTable(
         run_scratch("pacid", sf_dir, name), part="c_mktsegment"
     )
-    base = T(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_name",
-        F.round(F.col("c_acctbal"), 2).alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    tbl.create(base)
+    tbl.create(_demo_base(spark, sf_dir))
     v0 = tbl.read(spark, version=0)
     upd = v0.filter(
         (F.col("c_mktsegment") == "BUILDING") & (F.col("c_custkey") % 3 == 0)
@@ -1386,32 +1328,53 @@ def acid_partition_compaction(spark, sf_dir):
     return out
 
 
-@query(
-    "acid_concurrent_writers",
-    oracle="""
-    WITH v0 AS (
-      SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal,
-             c_mktsegment
-      FROM customer
-    ),
-    v1 AS (  -- writer A (wins the race): +10 for even keys
-      SELECT c_custkey, c_name,
-             CASE WHEN c_custkey % 2 = 0 THEN c_acctbal + 10
-                  ELSE c_acctbal END AS c_acctbal,
-             c_mktsegment
-      FROM v0
-    ),
-    v2 AS (  -- writer B's RETRY, re-derived from the v1 snapshot it lost to
-      SELECT c_custkey, c_name,
-             CASE WHEN c_custkey % 3 = 0
-                  THEN round(c_acctbal * 2 + 1e-9, 2)
-                  ELSE c_acctbal END AS c_acctbal,
-             c_mktsegment
-      FROM v1
+def _writer_a_delta(snap):
+    """Two-writer demos, writer A: +10 for even keys."""
+    return snap.filter(F.col("c_custkey") % 2 == 0).select(
+        "c_custkey", "c_name",
+        (F.col("c_acctbal") + 10).alias("c_acctbal"),
+        "c_mktsegment", F.lit("U").alias("_op"),
     )
-    SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM v2
-    """,
+
+
+def _writer_b_delta(snap):
+    """Two-writer demos, writer B: doubles every third key's balance."""
+    return snap.filter(F.col("c_custkey") % 3 == 0).select(
+        "c_custkey", "c_name",
+        F.round(F.col("c_acctbal") * 2 + F.lit(1e-9), 2).alias("c_acctbal"),
+        "c_mktsegment", F.lit("U").alias("_op"),
+    )
+
+
+# DuckDB replay of both two-writer demos: A's commit, then B's delta
+# derived from the v1 snapshot (B's retry after losing the race, or B
+# queued behind A's lease).
+_TWO_WRITERS_SQL = """
+WITH v0 AS (
+  SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal,
+         c_mktsegment
+  FROM customer
+),
+v1 AS (  -- writer A: +10 for even keys
+  SELECT c_custkey, c_name,
+         CASE WHEN c_custkey % 2 = 0 THEN c_acctbal + 10
+              ELSE c_acctbal END AS c_acctbal,
+         c_mktsegment
+  FROM v0
+),
+v2 AS (  -- writer B, derived from the v1 snapshot
+  SELECT c_custkey, c_name,
+         CASE WHEN c_custkey % 3 = 0
+              THEN round(c_acctbal * 2 + 1e-9, 2)
+              ELSE c_acctbal END AS c_acctbal,
+         c_mktsegment
+  FROM v1
 )
+SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM v2
+"""
+
+
+@query("acid_concurrent_writers", oracle=_TWO_WRITERS_SQL)
 def acid_concurrent_writers(spark, sf_dir):
     """The user-visible optimistic-concurrency contract, end-to-end: two
     writers derive deltas from the SAME v0 snapshot; A commits v1; B's
@@ -1427,29 +1390,9 @@ def acid_concurrent_writers(spark, sf_dir):
 
     root = run_scratch("acid", sf_dir, "concurrent_writers")
     a, b = AcidTable(root), AcidTable(root)
-    base = T(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_name",
-        F.round(F.col("c_acctbal"), 2).alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    a.create(base)
-
-    def derive_b(snap):
-        return snap.filter(F.col("c_custkey") % 3 == 0).select(
-            "c_custkey", "c_name",
-            F.round(F.col("c_acctbal") * 2 + F.lit(1e-9), 2).alias(
-                "c_acctbal"
-            ),
-            "c_mktsegment", F.lit("U").alias("_op"),
-        )
-
-    d_a = a.read(spark, version=0).filter(F.col("c_custkey") % 2 == 0).select(
-        "c_custkey", "c_name",
-        (F.col("c_acctbal") + 10).alias("c_acctbal"),
-        "c_mktsegment", F.lit("U").alias("_op"),
-    )
-    d_b_stale = derive_b(b.read(spark, version=0))
+    a.create(_demo_base(spark, sf_dir))
+    d_a = _writer_a_delta(a.read(spark, version=0))
+    d_b_stale = _writer_b_delta(b.read(spark, version=0))
     if a.commit_delta(d_a, read_version=0) != 1:
         raise AssertionError("writer A did not commit v1")
     conflicted = False
@@ -1462,7 +1405,7 @@ def acid_concurrent_writers(spark, sf_dir):
     committed_v = None
     for _ in range(5):  # the documented retry loop
         seen = b.latest_version()
-        retry = derive_b(b.read(spark, version=seen))
+        retry = _writer_b_delta(b.read(spark, version=seen))
         try:
             committed_v = b.commit_delta(retry, read_version=seen)
             break
@@ -1481,32 +1424,7 @@ def acid_concurrent_writers(spark, sf_dir):
     return out
 
 
-@query(
-    "acid_lease_writers",
-    oracle="""
-    WITH v0 AS (
-      SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal,
-             c_mktsegment
-      FROM customer
-    ),
-    v1 AS (  -- writer A, under the lease: +10 for even keys
-      SELECT c_custkey, c_name,
-             CASE WHEN c_custkey % 2 = 0 THEN c_acctbal + 10
-                  ELSE c_acctbal END AS c_acctbal,
-             c_mktsegment
-      FROM v0
-    ),
-    v2 AS (  -- writer B, QUEUED behind A (never conflicted, never retried)
-      SELECT c_custkey, c_name,
-             CASE WHEN c_custkey % 3 = 0
-                  THEN round(c_acctbal * 2 + 1e-9, 2)
-                  ELSE c_acctbal END AS c_acctbal,
-             c_mktsegment
-      FROM v1
-    )
-    SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM v2
-    """,
-)
+@query("acid_lease_writers", oracle=_TWO_WRITERS_SQL)
 def acid_lease_writers(spark, sf_dir):
     """The BLOCKING writer-lease contract end-to-end (r11, VERDICT task 4
     — Hive DbTxnManager's queueing vs the OCC retry of
@@ -1524,13 +1442,7 @@ def acid_lease_writers(spark, sf_dir):
 
     root = run_scratch("acid", sf_dir, "lease_writers")
     a, b = AcidTable(root), AcidTable(root)
-    base = T(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_name",
-        F.round(F.col("c_acctbal"), 2).alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    a.create(base)
+    a.create(_demo_base(spark, sf_dir))
     lease_a = WriterLease(a.commits, ttl_s=60.0).acquire(timeout_s=5)
     try:
         blocked = False
@@ -1540,27 +1452,12 @@ def acid_lease_writers(spark, sf_dir):
             blocked = True
         if not blocked:
             raise AssertionError("writer B acquired a HELD lease")
-        d_a = a.read(spark, version=0).filter(
-            F.col("c_custkey") % 2 == 0
-        ).select(
-            "c_custkey", "c_name",
-            (F.col("c_acctbal") + 10).alias("c_acctbal"),
-            "c_mktsegment", F.lit("U").alias("_op"),
-        )
+        d_a = _writer_a_delta(a.read(spark, version=0))
         lease_a.heartbeat()
         if a.commit_delta(d_a, read_version=0) != 1:
             raise AssertionError("writer A did not commit v1")
     finally:
         lease_a.release()
-
-    def derive_b(snap):
-        return snap.filter(F.col("c_custkey") % 3 == 0).select(
-            "c_custkey", "c_name",
-            F.round(F.col("c_acctbal") * 2 + F.lit(1e-9), 2).alias(
-                "c_acctbal"
-            ),
-            "c_mktsegment", F.lit("U").alias("_op"),
-        )
 
     conflicts = []
     orig_commit = b.commit_delta
@@ -1573,7 +1470,7 @@ def acid_lease_writers(spark, sf_dir):
             raise
 
     b.commit_delta = counting_commit
-    v = b.commit_transaction(spark, derive_b, use_lease=True)
+    v = b.commit_transaction(spark, _writer_b_delta, use_lease=True)
     if v != 2:
         raise AssertionError(f"queued writer B landed at v{v}, expected v2")
     if conflicts:

@@ -133,16 +133,23 @@ _RULES: tuple[tuple[re.Pattern[str], str], ...] = (
     # ... and an environment-dependent Java callsite (renders as
     # `NativeMethodAccessorImpl.java:0` under some JVMs, `<unknown>:0`
     # under others) — r13, normalize the whole callsite token
-    (re.compile(r"localCheckpoint at [^,]+"), "localCheckpoint at <SITE>"),
+    # (one line at most: a callsite ending its line must not swallow the
+    # plan lines after it)
+    (re.compile(r"localCheckpoint at [^,\n]+"), "localCheckpoint at <SITE>"),
 )
 
 
 def normalized_plan(df) -> str:
     """Formatted physical explain with run-varying tokens normalized."""
-    raw = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+    return normalize_plan_text(
+        df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
     )
-    out = raw
+
+
+def normalize_plan_text(out: str) -> str:
+    """Apply the run-varying-token rules to a formatted explain string."""
     for pat, repl in _RULES:
         out = pat.sub(repl, out)
     # strip trailing whitespace per line; drop trailing blank lines

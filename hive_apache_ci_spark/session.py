@@ -55,14 +55,10 @@ RUNTIME_CONFS: dict[str, str] = {
     # changes content). Production posture: SHJ spills gracefully since
     # Spark 3.2, AQE's local-map threshold below bounds the runtime
     # SMJ->SHJ rewrite to builds that provably fit one map's output, and
-    # bucketed/SMB paths pin SMJ via hint('merge') regardless. Both knobs
-    # env-tunable; set SPARK_GRAFT_PREFER_SMJ=true to restore the old
-    # planner bias on memory-constrained clusters.
-    "spark.sql.join.preferSortMergeJoin": os.environ.get(
-        "SPARK_GRAFT_PREFER_SMJ", "false"
-    ),
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-        "SPARK_GRAFT_SHJ_LOCALMAP", str(64 * 1024 * 1024)
+    # bucketed/SMB paths pin SMJ via hint('merge') regardless.
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(
+        64 * 1024 * 1024
     ),
     # Scan-split sizing: the testdata files are single-digit-MB parquet, so
     # the 128 MB default yields 1-3 splits and leaves 32 cores idle on every

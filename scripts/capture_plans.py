@@ -12,6 +12,7 @@ reviewable.
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -22,22 +23,31 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Dump formatted plans of registry queries."
+    )
+    ap.add_argument("tag", help="suffix of the dump file names")
+    ap.add_argument("names", nargs="+", help="registry query names")
+    args = ap.parse_args(argv)
 
     from hive_apache_ci_spark import registry
-    from hive_apache_ci_spark.session import get_spark
 
     queries = registry.all_queries()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        ap.error(f"unknown query name(s): {', '.join(unknown)}")
+
+    from hive_apache_ci_spark.session import get_spark
+
     spark = get_spark("capture_plans")
-    for name in names:
+    for name in args.names:
         df = queries[name](spark, SF_DIR)
         raw = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         raw = re.sub(r"0x[0-9A-Fa-f]{64,}", "0x<LUT-BYTES>", raw)
-        path = os.path.join(REPO, "plans", "r13", f"{name}_{tag}.txt")
+        path = os.path.join(REPO, "plans", "r13", f"{name}_{args.tag}.txt")
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as fh:
             fh.write(raw)

@@ -141,9 +141,11 @@ def test_acid_compacted_read_scans_base_only(spark, tmp_path):
     import io
 
     tbl = _tiny_acid(spark, str(tmp_path / "t"))
-    tbl.compact(spark)
+    v = tbl.compact(spark)
     m = tbl.manifest()
     assert m["deltas"] == [] and m["base"].startswith("base_3")
+    # second compact: nothing dirty -> no-op, no new version
+    assert tbl.compact(spark) == v == tbl.latest_version()
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         tbl.read(spark).explain(mode="formatted")
@@ -247,19 +249,22 @@ def test_acid_optimistic_concurrency(spark, tmp_path):
 
 def test_acid_delta_cardinality_guard(spark, tmp_path):
     """Two events for one key in one transaction must be rejected (same
-    _seq => arbitrary merge winner)."""
+    _seq => arbitrary merge winner) — flat and partitioned alike."""
     from pyspark.sql import functions as F
 
     import pytest
 
-    tbl = _tiny_acid(spark, str(tmp_path / "t"))
-    base = tbl.read(spark, 0)
-    bad = base.filter("c_custkey = 1").select(
-        "c_custkey", "c_name", "c_acctbal", "c_mktsegment",
-        F.lit("U").alias("_op"),
-    )
-    with pytest.raises(ValueError, match="multiple events"):
-        tbl.commit_delta(bad.unionAll(bad))
+    for make in (_tiny_acid, _tiny_pacid):
+        tbl = make(spark, str(tmp_path / make.__name__))
+        v = tbl.latest_version()
+        base = tbl.read(spark, 0)
+        bad = base.filter("c_custkey = 1").select(
+            "c_custkey", "c_name", "c_acctbal", "c_mktsegment",
+            F.lit("U").alias("_op"),
+        )
+        with pytest.raises(ValueError, match="multiple events"):
+            tbl.commit_delta(bad.unionAll(bad))
+        assert tbl.latest_version() == v
 
 
 def test_acid_merge_on_read_window_partitions_by_key(spark, tmp_path):
@@ -308,17 +313,22 @@ def test_acid_vacuum_guards(spark, tmp_path):
 
     import pytest
 
-    tbl = _tiny_acid(spark, str(tmp_path / "t"))
-    with pytest.raises(ValueError, match="retain_versions"):
-        tbl.vacuum(retain_versions=0)
-    # co-located stream dirs must survive a vacuum
-    for extra in ("ckpt", "chunks", "stage_0"):
-        os.makedirs(os.path.join(tbl.root, extra), exist_ok=True)
-    tbl.compact(spark)
-    deleted = tbl.vacuum(retain_versions=1)
-    assert all(d.startswith(("base_", "delta_")) for d in deleted)
-    for extra in ("ckpt", "chunks", "stage_0", "_commits"):
-        assert os.path.isdir(os.path.join(tbl.root, extra))
+    for make in (_tiny_acid, _tiny_pacid):
+        tbl = make(spark, str(tmp_path / make.__name__))
+        with pytest.raises(ValueError, match="retain_versions"):
+            tbl.vacuum(retain_versions=0)
+        # co-located stream dirs must survive a vacuum
+        for extra in ("ckpt", "chunks", "stage_0"):
+            os.makedirs(os.path.join(tbl.root, extra), exist_ok=True)
+        tbl.compact(spark)
+        deleted = tbl.vacuum(retain_versions=1)
+        assert deleted
+        assert all(
+            os.path.basename(d).startswith(("base_", "delta_"))
+            for d in deleted
+        )
+        for extra in ("ckpt", "chunks", "stage_0", "_commits"):
+            assert os.path.isdir(os.path.join(tbl.root, extra))
 
 
 # ---- partitioned ACID (round 10) -------------------------------------------
@@ -461,24 +471,60 @@ def test_pacid_metachar_partition_values_and_stage_gc(spark, tmp_path):
     assert not os.path.exists(orphan)
 
 
+def test_pacid_empty_table_reads_zero_rows(spark, tmp_path):
+    """A partitioned table created from zero rows has no chains; reading
+    it returns an empty DataFrame with the table's columns (as the flat
+    table does), and the first delta gives birth to its partitions."""
+    from pyspark.sql import functions as F
+
+    from hive_apache_ci_spark.operators.acid import (
+        AcidTable, PartitionedAcidTable,
+    )
+
+    schema = "c_custkey long, c_name string, c_acctbal double, c_mktsegment string"
+    empty = spark.createDataFrame([], schema)
+    flat = AcidTable(str(tmp_path / "flat"))
+    tbl = PartitionedAcidTable(str(tmp_path / "t"), part="c_mktsegment")
+    for t in (flat, tbl):
+        t.create(empty)
+        got = t.read(spark)
+        assert got.columns == t.cols and got.count() == 0
+    assert tbl.manifest()["partitions"] == {}
+    assert tbl.compact(spark) == [] and tbl.latest_version() == 0
+    rows = spark.createDataFrame([(1, "a", 10.0, "S1")], schema)
+    assert tbl.commit_delta(rows.withColumn("_op", F.lit("I"))) == 1
+    assert [r.c_custkey for r in tbl.read(spark).collect()] == [1]
+
+
 def test_acid_commit_transaction_auto_retry(spark, tmp_path):
     """commit_transaction: the automatic read->derive->pinned-commit->
     re-derive retry loop. A conflicting commit lands between the txn's
     snapshot read and its commit; the loop must re-derive from the NEW
     snapshot (the +1 applies on top of the interloper's x2, never on the
-    stale state) and succeed on the second attempt. Inherited by
-    PartitionedAcidTable unchanged. Livelock guard: a txn_fn that always
-    loses raises after max_retries."""
+    stale state) and succeed on the second attempt — flat and
+    partitioned alike. Livelock guard: a txn_fn that always loses raises
+    after max_retries."""
+    from hive_apache_ci_spark.operators.acid import (
+        AcidTable, PartitionedAcidTable,
+    )
+
+    for make, handle in (
+        (_tiny_acid, AcidTable),
+        (_tiny_pacid, lambda r: PartitionedAcidTable(r, part="c_mktsegment")),
+    ):
+        root = str(tmp_path / make.__name__)
+        _check_auto_retry(spark, make(spark, root), handle(root))
+
+
+def _check_auto_retry(spark, tbl, rival):
     from pyspark.sql import functions as F
 
     import pytest
 
-    from hive_apache_ci_spark.operators.acid import (
-        AcidTable, ConcurrentCommitError,
-    )
+    from hive_apache_ci_spark.operators.acid import ConcurrentCommitError
 
-    root = str(tmp_path / "t")
-    tbl, rival = _tiny_acid(spark, root), AcidTable(root)
+    v0 = tbl.latest_version()
+    bal = {r.c_custkey: r.c_acctbal for r in tbl.read(spark).collect()}[1]
     calls = {"n": 0}
 
     def txn(snap):
@@ -496,9 +542,9 @@ def test_acid_commit_transaction_auto_retry(spark, tmp_path):
             "c_mktsegment", F.lit("U").alias("_op"))
 
     v = tbl.commit_transaction(spark, txn)
-    assert calls["n"] == 2 and v == 4          # one conflict, one retry
+    assert calls["n"] == 2 and v == v0 + 2     # one conflict, one retry
     got = {r.c_custkey: r.c_acctbal for r in tbl.read(spark).collect()}
-    assert got[1] == 21.0                      # (10*2)+1, never 10+1
+    assert got[1] == bal * 2 + 1               # (bal*2)+1, never bal+1
 
     def always_loses(snap):
         rival.commit_delta(

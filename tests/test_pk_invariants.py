@@ -16,6 +16,7 @@ every locally present SF, so they are cheap and engine-independent.
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 
@@ -76,6 +77,8 @@ def test_lineitem_composite_key_is_not_assumed_unique():
     is NOT unique in this corpus, so no rewrite may assume it. If the
     generator ever makes it unique, this xfail-style guard flips and the
     q93 fold becomes legal again — worth knowing either way."""
+    if not _SF_DIRS:
+        pytest.skip("no testdata corpus present")
     con = duck_connect(_SF_DIRS[-1])
     try:
         total, distinct = con.execute(
@@ -93,3 +96,11 @@ def test_lineitem_composite_key_is_not_assumed_unique():
             "corpus regenerated with unique (l_orderkey, l_linenumber): "
             "the q93 join-to-CASE fold (OPTIMIZATION_r12 §15) is now legal"
         )
+
+
+def test_lineitem_key_check_skips_without_corpus(monkeypatch):
+    """Without any testdata corpus the lineitem check skips instead of
+    erroring on an empty dir list."""
+    monkeypatch.setattr(sys.modules[__name__], "_SF_DIRS", [])
+    with pytest.raises(pytest.skip.Exception):
+        test_lineitem_composite_key_is_not_assumed_unique()

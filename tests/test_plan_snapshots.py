@@ -14,7 +14,9 @@ import os
 
 import pytest
 
-from hive_apache_ci_spark.plan_snapshot import SNAPSHOT_QUERIES, normalized_plan
+from hive_apache_ci_spark.plan_snapshot import (
+    SNAPSHOT_QUERIES, normalize_plan_text, normalized_plan,
+)
 from hive_apache_ci_spark.registry import all_queries
 
 from .conftest import SF_DIR
@@ -77,3 +79,36 @@ def test_no_stale_snapshots():
     assert files == set(SNAPSHOT_QUERIES), (
         files.symmetric_difference(SNAPSHOT_QUERIES)
     )
+
+
+def test_checkpoint_callsite_rule_stays_on_its_line():
+    """A localCheckpoint callsite that ends its line is normalized without
+    swallowing the plan lines after it (which would mask real diffs)."""
+    raw = (
+        "Scan ExistingRDD (1)\n"
+        "+- MapPartitionsRDD[26] localCheckpoint at Native.java:0\n"
+        "+- Exchange hashpartitioning(k#1, 32) (2)\n"
+    )
+    assert normalize_plan_text(raw).splitlines() == [
+        "Scan ExistingRDD (1)",
+        "+- MapPartitionsRDD[NL] localCheckpoint at <SITE>",
+        "+- Exchange hashpartitioning(k#N, 32) (2)",
+    ]
+
+
+def test_capture_plans_prints_usage(capsys):
+    """scripts/capture_plans.py answers missing arguments and unknown
+    query names with its usage, before any session starts."""
+    import importlib.util
+
+    path = os.path.join(
+        os.path.dirname(__file__), "..", "scripts", "capture_plans.py"
+    )
+    spec = importlib.util.spec_from_file_location("capture_plans", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    for argv in ([], ["tag"], ["tag", "no_such_query"]):
+        with pytest.raises(SystemExit) as exc:
+            mod.main(argv)
+        assert exc.value.code == 2
+        assert "usage:" in capsys.readouterr().err
