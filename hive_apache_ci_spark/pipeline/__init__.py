@@ -6,8 +6,14 @@ text-quality operators); these are first-class engine components for
 
 - ``dedup``         — exact, normalized, MinHash+LSH banding, n-gram
   Jaccard verification, SimHash fingerprints.
-- ``similarity``    — brute-force top-k cosine (oracle baseline) +
-  LSH-bucketed approximate variant (the scale path).
+- ``similarity``    — exact top-k cosine (oracle baseline), LSH
+  candidates, IVF (coarse centroids, routing, nprobe probing, top-k /
+  range search and recall / sweep / traffic reports), product
+  quantization, IVF-PQ search and its index lifecycle (build, search,
+  frozen-codebook ingest, retrain decision, merge-compact), k-means /
+  SemDeDup, filtered and MMR search. Each vector kernel (squared L2,
+  label-mean centroids, routing, probing, exact-cosine top-k, PQ
+  encoding, ADC scoring, IVF-PQ search) is one shared helper there.
 - ``text_analysis`` — token/char stats, quality scoring, language-ID
   heuristic, regex (BPE-ish) tokenization, document fingerprints.
 - ``multimodal``    — opaque binary columns with typed metadata; decode /

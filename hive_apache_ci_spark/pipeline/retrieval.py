@@ -390,6 +390,8 @@ def _prf_query_vector(bm, e):
     """1-row (qvec) DataFrame: the 6dp-quantized dimension-wise mean of
     the BM25 top-{P} docs' embeddings — classic vector PRF, shared by the
     brute-force and indexed RRF variants."""
+    from .similarity import _by_pos
+
     qdims = (
         bm.filter(F.col("bm_rk") <= _RRF_PRF_DOCS)
         .join(e, bm.doc_id == e.vec_id)
@@ -399,12 +401,7 @@ def _prf_query_vector(bm, e):
             F.round(F.avg(F.col("val").cast("double")) + F.lit(1e-12), 6).alias("c")
         )
     )
-    return qdims.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))),
-            lambda s: s.getField("c"),
-        ).alias("qvec")
-    )
+    return qdims.agg(_by_pos("c").alias("qvec"))
 
 
 def _rrf_cos_sql() -> str:
@@ -476,7 +473,7 @@ def search_hybrid_rrf(spark, sf_dir):
     brute-force arm at corpus scale); fusion itself touches only
     {A}+{A} id-rank rows. The PRF mean is 6-dp-quantized (the centroid
     discipline) so both engines rank against the identical query vector."""
-    from .similarity import dot_fold
+    from .similarity import cosine
 
     # localCheckpoint the two tiny arm intermediates (r12 optimization,
     # guide §3.3 "materialise an intermediate to truncate the plan"): `bm`
@@ -492,10 +489,7 @@ def search_hybrid_rrf(spark, sf_dir):
     )
     e = T(spark, sf_dir, "embeddings")
     qv = _prf_query_vector(bm, e).localCheckpoint()
-    cos = dot_fold(F.col("embedding"), F.col("qvec")) / (
-        F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(dot_fold(F.col("qvec"), F.col("qvec")))
-    )
+    cos = cosine(F.col("embedding"), F.col("qvec"))
     wsem = Window.orderBy(F.desc("sim"), F.asc("vec_id"))
     sem = (
         e.crossJoin(F.broadcast(qv))
@@ -588,7 +582,7 @@ def _rrf_indexed_oracle() -> str:
       CROSS JOIN (SELECT unnest(range(0, {_PQ_M})) AS s) sp
     ),
     lut AS (
-      SELECT q.s, c.cid, {_SUB_D2_SQL} AS pd2
+      SELECT q.s, c.cid, {_SUB_D2_SQL.format(a='q.emb', b='c.cvec')} AS pd2
       FROM qsub q JOIN c{_PQ_ITERS} c ON q.s = c.s
     ),
     adc AS (
@@ -662,10 +656,13 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
 
     from .similarity import (
         _IVF_PROBE,
-        _PQ_M,
-        _PQ_SUB,
+        _PQ_INDEX_TABLES,
+        _d2_order,
         _ensure_pq_index,
-        dot_fold,
+        _l2sq,
+        _pq_adc,
+        _pq_lut,
+        cosine,
     )
 
     # Same tiny-intermediate materialization as search_hybrid_rrf (r12):
@@ -681,54 +678,22 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings")
     qv = _prf_query_vector(bm, e).localCheckpoint()
     idx = _ensure_pq_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(idx, "coarse"))
-    routing = spark.read.parquet(os.path.join(idx, "routing"))
-    codebook = spark.read.parquet(os.path.join(idx, "codebook"))
-    codes = spark.read.parquet(os.path.join(idx, "codes"))
-    qd2 = F.aggregate(
-        F.zip_with(
-            F.col("qvec"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    coarse, routing, codebook, codes = (
+        spark.read.parquet(os.path.join(idx, t)) for t in _PQ_INDEX_TABLES
     )
+    # one query: probe selection is an orderBy/limit (TakeOrderedAndProject),
+    # not the multi-query probe window
     probes = (
         qv.crossJoin(F.broadcast(coarse))
-        .select("c_label", qd2.alias("d2"))
-        .orderBy(F.col("d2") + F.col("c_label") * 1e-12)
+        .select("c_label", _l2sq(F.col("qvec"), F.col("cvec")).alias("d2"))
+        .orderBy(_d2_order())
         .limit(_IVF_PROBE)
         .select("c_label")
     )
-    cands = routing.join(F.broadcast(probes), "c_label").select("vec_id")
-    sub = spark.range(_PQ_M).select(F.col("id").cast("int").alias("s"))
-    qsub = (
-        qv.crossJoin(F.broadcast(sub))
-        .select(
-            "s",
-            F.transform(
-                F.slice("qvec", F.col("s") * _PQ_SUB + 1, _PQ_SUB),
-                lambda x: x.cast("double"),
-            ).alias("qemb"),
-        )
+    cands = routing.join(F.broadcast(probes), "c_label").select(
+        F.col("vec_id").alias("neighbor_id")
     )
-    pd2 = F.round(
-        F.aggregate(
-            F.zip_with("qemb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    lut = qsub.join(codebook, "s").select("s", "cid", pd2.alias("pd2"))
-    adc = (
-        cands.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["s", "cid"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
-    )
+    adc = _pq_adc(cands, codes, _pq_lut(qv, "qvec", codebook))
     wsem = Window.orderBy("adc_d2", "doc_id")
     # r13 (r12 VERDICT task 4): `sem` is referenced by BOTH the fusion
     # join and the recall audit — un-materialized, each reference
@@ -737,17 +702,14 @@ def search_hybrid_rrf_indexed(spark, sf_dir):
     # the arm). localCheckpoint the ≤ARM_K-row rank list once (recomputed
     # from parquet every invocation, same discipline as `bm`/`qv`).
     sem = (
-        adc.select(F.col("vec_id").alias("doc_id"), "adc_d2")
+        adc.select(F.col("neighbor_id").alias("doc_id"), "adc_d2")
         .orderBy("adc_d2", "doc_id")
         .limit(_RRF_ARM_K)
         .withColumn("vec_rk", F.row_number().over(wsem))
         .select("doc_id", "vec_rk")
         .localCheckpoint()
     )
-    cos = dot_fold(F.col("embedding"), F.col("qvec")) / (
-        F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(dot_fold(F.col("qvec"), F.col("qvec")))
-    )
+    cos = cosine(F.col("embedding"), F.col("qvec"))
     bf = (
         e.crossJoin(F.broadcast(qv))
         .select("vec_id", cos.alias("sim"))

@@ -1,5 +1,25 @@
 """Embedding similarity search over ``embeddings`` (SURVEY.md §2.11).
 
+What the module holds: brute-force exact top-k cosine (the oracle
+baseline), multi-table LSH candidates, IVF (label-mean coarse centroids,
+nearest-centroid routing, nprobe probing, top-k / range search, recall,
+nprobe-sweep and probe-traffic reports), product quantization (per-
+subspace Lloyd codebooks), IVF-PQ asymmetric-distance search and the
+IVF-PQ index lifecycle (build/publish, search, frozen-codebook ingest,
+retrain decision, merge-compact), Lloyd k-means and SemDeDup, filtered,
+range and MMR-diversified search, and JL / scalar compression.
+
+Every Spark-side vector kernel exists once, as a private helper below:
+``_l2sq`` (squared L2), ``_label_centroid_dims`` / ``_label_centroids``
+(the 6dp label-mean coarse quantizer), ``_route`` (nearest-centroid
+assignment), ``_probes`` (nprobe probe selection), ``_cos_sides`` /
+``_cos_qc`` / ``_topk`` (norm-once exact cosine and the per-query top-k
+window), ``_pq_subvectors`` / ``_pq_encode`` (PQ split and nearest-codeword
+encoding), ``_pq_lut`` / ``_pq_adc`` (ADC scoring) and ``_ivf_pq_search``
+(the one IVF-PQ search). Operators keep only their candidate generation.
+The DuckDB oracles mirror them with SQL-only fragments (``_coarse_ctes``,
+``_probe_ctes``, ``_pq_ctes``, ``_FULL_D2_SQL``, ``_SUB_D2_SQL``).
+
 Cosine arithmetic is written so both engines compute *bitwise-identical*
 doubles: each float is cast to double before multiplying, and products are
 summed sequentially in array order (Spark ``F.aggregate`` left-fold ==
@@ -8,14 +28,15 @@ against a Python fold). That makes brute-force top-k rank-stable across
 engines with no tolerance games.
 
 Scale notes: brute-force is the *oracle baseline* (O(Q·N) — fine for a
-bounded query set against a broadcastable index shard). The scale path is
-``knn_lsh_topk``: deterministic random-hyperplane buckets cut the candidate
-set, turning the cross join into a bucket-keyed equi-join — at 100 TB the
-bucket is the shuffle key and each bucket's candidates fit an executor.
+bounded query set against a broadcastable index shard). The scale paths
+are ``knn_lsh_topk`` (random-hyperplane buckets turn the cross join into a
+bucket-keyed equi-join) and the IVF / IVF-PQ searches (candidates ∝ the
+probed inverted lists, never the corpus).
 """
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..helpers import T, ravg, spread
@@ -33,6 +54,182 @@ def dot_fold(a, b):
 
 def cosine(a, b):
     return dot_fold(a, b) / (F.sqrt(dot_fold(a, a)) * F.sqrt(dot_fold(b, b)))
+
+
+# ---- shared vector kernels -------------------------------------------------
+
+
+def _l2sq(a, b):
+    """Sequential double-precision squared L2 distance (the dot_fold fold
+    order). ``b`` is promoted to double by the subtraction; callers that
+    quantize (Lloyd, PQ) round at the call site."""
+    diffs = F.zip_with(
+        a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
+    )
+    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _d2_order():
+    """Centroid ranking key: distance, ties to the smaller label."""
+    return F.col("d2") + F.col("c_label") * 1e-12
+
+
+def _by_pos(col: str):
+    """Aggregate: the group's ``col`` values as an array ordered by ``pos``."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct("pos", col))),
+        lambda s: s.getField(col),
+    )
+
+
+def _label_centroid_dims(e):
+    """(label, pos, c): per-label per-dimension mean of ``e``'s embeddings
+    (any frame: full corpus, base slice, train split) — the IVF coarse
+    quantizer. One shuffle keyed by (label, dim), |labels|×dim cells."""
+    dims = e.select(
+        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
+    ).select(
+        "label",
+        (F.col("pos0") + 1).alias("pos"),
+        F.col("val_f").cast("double").alias("val"),
+    )
+    return dims.groupBy("label", "pos").agg(
+        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
+        # repo-wide discipline: cross-engine/run summation-order noise in
+        # the mean must not flip near-tie coarse assignments (ADVICE r4).
+        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
+    )
+
+
+def _label_centroids(e):
+    """(c_label, cvec): the label-mean centroids, one vector per label."""
+    return (
+        _label_centroid_dims(e)
+        .groupBy("label")
+        .agg(_by_pos("c").alias("cvec"))
+        .select(F.col("label").alias("c_label"), "cvec")
+    )
+
+
+def _route(v, cvecs):
+    """Nearest-centroid assignment: each ``v`` row (keys..., embedding) to
+    its L2-nearest (c_label, cvec) centroid, ties to the smaller label —
+    broadcast centroids, map-side min_by. Returns (keys..., c_label)."""
+    keys = [c for c in v.columns if c != "embedding"]
+    return (
+        v.join(F.broadcast(cvecs))
+        .select(
+            *keys, "c_label", _l2sq(F.col("embedding"), F.col("cvec")).alias("d2")
+        )
+        .groupBy(*keys)
+        .agg(F.min_by("c_label", _d2_order()).alias("c_label"))
+    )
+
+
+def _queries(e):
+    """(query_id, embedding): the query panel."""
+    return e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+def _probes(q, cvecs, nprobe: int):
+    """(query_id, c_label): each query's ``nprobe`` nearest centroids."""
+    w = Window.partitionBy("query_id").orderBy(_d2_order())
+    return (
+        q.join(F.broadcast(cvecs))
+        .select(
+            "query_id", "c_label",
+            _l2sq(F.col("embedding"), F.col("cvec")).alias("d2"),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= nprobe)
+        .select("query_id", "c_label")
+    )
+
+
+def _probe_cands(probes, routing):
+    """(query_id, neighbor_id): every vector routed to a probed list, the
+    query itself excluded. The join shuffles on c_label, the inverted-list
+    key, so cost is ∝ the probed lists."""
+    return (
+        F.broadcast(probes)
+        .join(routing, "c_label")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
+
+
+def _cos_sides(e, *carry):
+    """The two sides of exact-cosine scoring over ``e`` (vec_id, embedding,
+    carry...): queries (query_id, q<carry>..., qe, qn) and candidates
+    (neighbor_id, c<carry>..., ce, cn). Norms are computed once per vector,
+    not once per pair — the fold is deterministic, so sims are unchanged."""
+    e = e.withColumn(
+        "nrm", F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
+    )
+
+    def side(key, p):
+        return e.select(
+            F.col("vec_id").alias(key),
+            *[F.col(c).alias(p + c) for c in carry],
+            F.col("embedding").alias(p + "e"),
+            F.col("nrm").alias(p + "n"),
+        )
+
+    return side("query_id", "q"), side("neighbor_id", "c")
+
+
+def _cos_qc():
+    """Exact cosine of a joined (qe, qn) × (ce, cn) row."""
+    return dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
+
+
+def _score_pairs(e, pairs):
+    """(query_id, neighbor_id, sim_raw) for candidate id pairs: vectors are
+    re-attached once per distinct pair (generate cheap, verify narrow), the
+    query side broadcast."""
+    q, c = _cos_sides(e)
+    return (
+        pairs.join(F.broadcast(q), "query_id")
+        .join(c, "neighbor_id")
+        .select("query_id", "neighbor_id", _cos_qc().alias("sim_raw"))
+    )
+
+
+def _rank_by_sim(sims):
+    """Adds each query's ``rank``: sim_raw desc, neighbor_id tiebreak."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim_raw").desc(), F.col("neighbor_id")
+    )
+    return sims.withColumn("rank", F.row_number().over(w))
+
+
+def _topk(sims, k: int):
+    """Per-query top-k of (query_id, carry..., neighbor_id, sim_raw) as
+    (query_id, carry..., neighbor_id, rank, sim) with a 6dp ``sim``."""
+    fixed = ("query_id", "neighbor_id", "sim_raw")
+    carry = [c for c in sims.columns if c not in fixed]
+    return (
+        _rank_by_sim(sims)
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", *carry, "neighbor_id", "rank",
+            F.round("sim_raw", 6).alias("sim"),
+        )
+    )
+
+
+def _knn_exact(e):
+    """Brute-force top-k cosine neighbours of the query panel over ``e``
+    (vec_id, embedding): broadcast query side, per-query window."""
+    q, c = _cos_sides(e)
+    sims = (
+        F.broadcast(q.filter(F.col("query_id") < N_QUERIES))
+        .join(c, F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", _cos_qc().alias("sim_raw"))
+    )
+    return _topk(sims, TOP_K)
 
 
 _DOT_SQL = (
@@ -69,43 +266,7 @@ def knn_topk_cosine(spark, sf_dir):
     """Brute-force top-k cosine neighbors for the first {N_QUERIES} vectors
     — the exact-ANN baseline. Query side is broadcast (tiny); ranking is a
     per-query window with vec_id tiebreak."""
-    from pyspark.sql import Window
-
-    e = T(spark, sf_dir, "embeddings").withColumn(
-        # norms once per vector, not once per (query, candidate) pair — the
-        # sequential fold is deterministic, so sim doubles are unchanged
-        "nrm",
-        F.sqrt(dot_fold(F.col("embedding"), F.col("embedding"))),
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    sims = (
-        F.broadcast(q)
-        .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "sim_raw"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _knn_exact(T(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -370,8 +531,6 @@ def knn_lsh_topk(spark, sf_dir):
     tests/test_pipeline.py additionally bounds recall vs the brute-force
     baseline. The scale path: (table, bucket) is the shuffle key, so
     candidate generation is an equi-join, not a cross join."""
-    from pyspark.sql import Window
-
     base = T(spark, sf_dir, "embeddings")
     tb = lsh_table_buckets(base.select("vec_id", "embedding"))
     # ids-only through bucket join + DISTINCT; vectors re-attached once per
@@ -388,38 +547,7 @@ def knn_lsh_topk(spark, sf_dir):
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    withnorm = base.withColumn(
-        "nrm", F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
-    )
-    qv = withnorm.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    cv = withnorm.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    sims = (
-        pairs.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "sim_raw"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("sim_raw", 6).alias("sim"))
-    )
+    return _topk(_score_pairs(base, pairs), TOP_K)
 
 
 @query(
@@ -447,28 +575,81 @@ def similar_pairs_threshold(spark, sf_dir):
     )
 
 
-_CENTROID_SQL = """
-    WITH dims AS (
-      SELECT label,
-             u.pos AS pos, u.val AS val
+# Shared oracle SQL fragments — plain SQL mirrors of the Spark kernels
+# (single source: a determinism fix here must reach every consumer, incl.
+# retrieval's indexed-RRF oracle). _FULL_D2_SQL is _l2sq over float
+# embeddings; _SUB_D2_SQL is the 9dp-rounded Lloyd/PQ distance over
+# double sub-vectors.
+_FULL_D2_SQL = (
+    "list_sum(list_transform(list_zip({a}, {b}), "
+    "p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
+    " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
+)
+_SUB_D2_SQL = (
+    "round(list_sum(list_transform(list_zip({a}, {b}), "
+    "p -> (p[1] - p[2]) * (p[1] - p[2]))), 9)"
+)
+
+
+def _coarse_ctes(cent_src: str = "embeddings") -> str:
+    """dims/centroids/cvl/assigned CTE bodies (no WITH) — the label-mean
+    coarse router replay (6dp centroid quantization before any routing
+    argmin), shared by the IVF, IVF-PQ, merge-compact and indexed-RRF
+    oracles. `cent_src` trains the centroids on a slice (frozen-router
+    compaction) while assignment always routes the full corpus."""
+    return f"""
+    dims AS (
+      SELECT label, u.pos AS pos, u.val AS val
       FROM (
         SELECT label,
                unnest(list_transform(range(1, len(embedding) + 1),
-                      i -> {'pos': i, 'val': CAST(embedding[i] AS DOUBLE)})) AS u
-        FROM embeddings
+                      i -> {{'pos': i, 'val': CAST(embedding[i] AS DOUBLE)}})) AS u
+        FROM {cent_src}
       )
     ),
     centroids AS (
-      SELECT label, pos, round(avg(val) + 1e-12, 6) AS c
-      FROM dims GROUP BY label, pos
-    )
-"""
+      SELECT label, pos, round(avg(val) + 1e-12, 6) AS c FROM dims GROUP BY label, pos
+    ),
+    cvl AS (
+      SELECT label AS c_label, list(c ORDER BY pos) AS cvec
+      FROM centroids GROUP BY label
+    ),
+    assigned AS (
+      SELECT vec_id,
+             arg_min(c_label,
+                     {_FULL_D2_SQL.format(a='embedding', b='cvec')}
+                     + c_label * 1e-12) AS c_label
+      FROM embeddings CROSS JOIN cvl
+      GROUP BY vec_id
+    )"""
+
+
+def _probe_ctes(nprobe: int) -> str:
+    """probes/cands CTE bodies over _coarse_ctes: each query's nprobe
+    nearest lists and the vectors routed to them (query excluded)."""
+    return f"""
+    probes AS (
+      SELECT vec_id AS query_id, c_label FROM (
+        SELECT e.vec_id, c.c_label,
+               row_number() OVER (
+                 PARTITION BY e.vec_id
+                 ORDER BY {_FULL_D2_SQL.format(a='e.embedding', b='c.cvec')}
+                          + c.c_label * 1e-12) AS rk
+        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) e
+        CROSS JOIN cvl c
+      ) WHERE rk <= {nprobe}
+    ),
+    cands AS (
+      SELECT p.query_id, a.vec_id AS neighbor_id
+      FROM probes p JOIN assigned a USING (c_label)
+      WHERE a.vec_id <> p.query_id
+    )"""
 
 
 @query(
     "ivf_centroids",
-    oracle=_CENTROID_SQL
-    + """
+    oracle=f"""
+    WITH {_coarse_ctes()}
     SELECT label, count(*) AS n_dims,
            round(sum(c * c) + 1e-9, 6) AS sq_norm
     FROM centroids
@@ -483,20 +664,7 @@ def ivf_centroids(spark, sf_dir):
 
     Scale: one shuffle keyed by (label, dim) — 640 cells regardless of
     corpus size; the centroid table is broadcastable forever after."""
-    e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
+    centroids = _label_centroid_dims(T(spark, sf_dir, "embeddings"))
     return centroids.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_dims"),
         ravg(F.sum(F.col("c") * F.col("c")), 6).alias("sq_norm"),
@@ -505,22 +673,11 @@ def ivf_centroids(spark, sf_dir):
 
 @query(
     "ivf_assign",
-    oracle=_CENTROID_SQL
-    + """
-    , cvecs AS (
-      SELECT label AS c_label, list(c ORDER BY pos) AS cvec FROM centroids GROUP BY label
-    ),
-    scored AS (
-      SELECT v.vec_id, v.label AS true_label, c.c_label,
-             list_sum(list_transform(list_zip(v.embedding, c.cvec),
-                      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-                         * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))) AS d2
-      FROM (SELECT * FROM embeddings WHERE vec_id < 200) v CROSS JOIN cvecs c
-    )
-    SELECT vec_id, true_label,
-           arg_min(c_label, d2 + c_label * 1e-12) AS assigned_label
-    FROM scored
-    GROUP BY vec_id, true_label
+    oracle=f"""
+    WITH {_coarse_ctes()}
+    SELECT a.vec_id, e.label AS true_label, a.c_label AS assigned_label
+    FROM assigned a JOIN embeddings e USING (vec_id)
+    WHERE a.vec_id < 200
     """,
 )
 def ivf_assign(spark, sf_dir):
@@ -532,46 +689,11 @@ def ivf_assign(spark, sf_dir):
     At 100 TB this is THE ANN scale path: assign once, shuffle by
     (centroid bucket), search within buckets only."""
     e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
+    v = e.filter(F.col("vec_id") < 200).select(
+        "vec_id", F.col("label").alias("true_label"), "embedding"
     )
-    centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvecs = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    v = e.filter(F.col("vec_id") < 200).select("vec_id", F.col("label").alias("true_label"), "embedding")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = v.join(F.broadcast(cvecs)).select(
-        "vec_id", "true_label", "c_label", d2.alias("d2")
-    )
-    return scored.groupBy("vec_id", "true_label").agg(
-        F.min_by("c_label", F.col("d2") + F.col("c_label") * 1e-12).alias(
-            "assigned_label"
-        )
+    return _route(v, _label_centroids(e)).withColumnRenamed(
+        "c_label", "assigned_label"
     )
 
 
@@ -581,41 +703,9 @@ _IVF_PROBE = 2  # nprobe: centroids searched per query
 def _ivf_ranked_ctes(nprobe: int) -> str:
     """The IVF candidate+rank CTE chain (through ``ranked``), shared by the
     top-k search oracles AND the round-7 radius search."""
-    return (
-        _CENTROID_SQL
-        + f"""
-    , cvecs AS (
-      SELECT label AS c_label, list(c ORDER BY pos) AS cvec
-      FROM centroids GROUP BY label
-    ),
-    assigned AS (
-      SELECT vec_id,
-             arg_min(c_label,
-                     list_sum(list_transform(list_zip(embedding, cvec),
-                              p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-                                 * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
-                     + c_label * 1e-12) AS c_label
-      FROM embeddings CROSS JOIN cvecs
-      GROUP BY vec_id
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, c_label FROM (
-        SELECT e.vec_id, c.c_label,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY list_sum(list_transform(list_zip(e.embedding, c.cvec),
-                          p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-                             * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
-                          + c.c_label * 1e-12) AS rk
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) e
-        CROSS JOIN cvecs c
-      ) WHERE rk <= {nprobe}
-    ),
-    cands AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assigned a USING (c_label)
-      WHERE a.vec_id <> p.query_id
-    ),
+    return f"""
+    WITH {_coarse_ctes()},
+    {_probe_ctes(nprobe)},
     ranked AS (
       SELECT c.query_id, c.neighbor_id,
              {_cos_sql('q.embedding', 'n.embedding')} AS sim,
@@ -628,7 +718,6 @@ def _ivf_ranked_ctes(nprobe: int) -> str:
       JOIN embeddings n ON n.vec_id = c.neighbor_id
     )
     """
-    )
 
 
 def _ivf_search_sql(nprobe: int) -> str:
@@ -664,124 +753,28 @@ def ivf_probe_topk(spark, sf_dir):
 
 
 def _ivf_search(spark, sf_dir, nprobe: int):
-    """Top-k IVF search (shared with ann_nprobe_sweep): rank the shared
-    candidate sims and keep TOP_K."""
-    from pyspark.sql import Window
-
-    sims = _ivf_candidate_sims(spark, sf_dir, nprobe)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "neighbor_id", "rank",
-            F.round("sim_raw", 6).alias("sim"),
-        )
-    )
+    """Top-k IVF search (shared with ann_nprobe_sweep)."""
+    return _topk(_ivf_candidate_sims(spark, sf_dir, nprobe), TOP_K)
 
 
 def _ivf_candidate_sims(spark, sf_dir, nprobe: int):
     """IVF candidate generation + exact cosine, parametrized by nprobe —
     the shared pre-ranking dataflow for top-k AND radius search."""
-    e = T(spark, sf_dir, "embeddings")
     assigned, probes = _ivf_routing(spark, sf_dir, nprobe)
-    cands = (
-        F.broadcast(probes)
-        .join(assigned, "c_label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    return _score_pairs(
+        T(spark, sf_dir, "embeddings"), _probe_cands(probes, assigned)
     )
-    return _ivf_score_cands(e, cands)
 
 
 def _ivf_routing(spark, sf_dir, nprobe: int):
     """(assigned, probes) — the IVF routing tables: every corpus vector's
     inverted-list assignment and every query's nprobe probed lists.
     Shared by search (candidate generation) and the traffic report."""
-    from pyspark.sql import Window
-
     e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvecs = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    tiebreak = F.col("d2") + F.col("c_label") * 1e-12
-    assigned = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(cvecs))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min_by("c_label", tiebreak).alias("c_label"))
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(tiebreak)
-    probes = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .join(F.broadcast(cvecs))
-        .select("query_id", "c_label", d2.alias("d2"))
-        .withColumn("rk", F.row_number().over(wprobe))
-        .filter(F.col("rk") <= nprobe)
-        .select("query_id", "c_label")
-    )
-    return assigned, probes
-
-
-def _ivf_score_cands(e, cands):
-    """Exact cosine over (query_id, neighbor_id) candidate pairs, norms
-    computed once per vector."""
-    withnorm = e.withColumn(
-        "nrm", F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
-    )
-    qv = withnorm.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    cv = withnorm.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
+    cvecs = _label_centroids(e)
     return (
-        cands.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "sim_raw"
-            ),
-        )
+        _route(e.select("vec_id", "embedding"), cvecs),
+        _probes(_queries(e), cvecs, nprobe),
     )
 
 
@@ -955,16 +948,7 @@ def embedding_scalar_quantize(spark, sf_dir):
     stats = (
         dims.groupBy("pos")
         .agg(F.min("val").alias("dmin"), F.max("val").alias("dmax"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "dmin"))),
-                lambda s: s.getField("dmin"),
-            ).alias("mins"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "dmax"))),
-                lambda s: s.getField("dmax"),
-            ).alias("maxs"),
-        )
+        .agg(_by_pos("dmin").alias("mins"), _by_pos("dmax").alias("maxs"))
     )
     codes = F.transform(
         F.arrays_zip(F.col("embedding"), F.col("mins"), F.col("maxs")),
@@ -1027,10 +1011,7 @@ def _kmeans_ctes() -> str:
       SELECT vec_id AS cid, emb AS cvec FROM vv ORDER BY vec_id LIMIT {_KM_K}
     )"""
     ]
-    d2 = (
-        "round(list_sum(list_transform(list_zip(v.emb, c.cvec), "
-        "p -> (p[1] - p[2]) * (p[1] - p[2]))), 9)"
-    )
+    d2 = _SUB_D2_SQL.format(a="v.emb", b="c.cvec")
     for i in range(1, _KM_ITERS + 1):
         parts.append(
             f""",
@@ -1132,14 +1113,7 @@ def _kmeans_train(spark, sf_dir):
         .limit(_KM_K)
         .select(F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("emb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
+    d2 = F.round(_l2sq(F.col("emb"), F.col("cvec")), 9)
     assign = None
     for _ in range(_KM_ITERS):
         scored = vv.crossJoin(F.broadcast(cent)).select(
@@ -1167,12 +1141,7 @@ def _kmeans_train(spark, sf_dir):
             .groupBy("cid", "pos")
             .agg(F.round(F.avg("val") + F.lit(1e-12), 6).alias("c"))
             .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s.getField("c"),
-                ).alias("new_cvec")
-            )
+            .agg(_by_pos("c").alias("new_cvec"))
         )
         cent = (
             cent.join(upd, "cid", "left")
@@ -1198,6 +1167,32 @@ _PQ_K = 4        # codes per subspace codebook
 _PQ_ITERS = 2
 
 
+def _pq_split_sql(src: str) -> str:
+    """(vec_id, s, emb) sub-vector rows of ``src`` — the SQL mirror of
+    _pq_subvectors."""
+    return f"""
+      SELECT e.vec_id, sp.s,
+             list_transform(list_slice(e.embedding,
+                                       sp.s * {_PQ_SUB} + 1,
+                                       sp.s * {_PQ_SUB} + {_PQ_SUB}),
+                            x -> CAST(x AS DOUBLE)) AS emb
+      FROM {src} e
+      CROSS JOIN (SELECT unnest(range(0, {_PQ_M})) AS s) sp"""
+
+
+def _pq_encode_sql(vv: str, cent: str) -> str:
+    """(vec_id, s, cid, d2) nearest-codeword assignment of ``vv``'s
+    sub-vectors against codebook ``cent`` — the SQL mirror of _pq_encode."""
+    d2 = _SUB_D2_SQL.format(a="v.emb", b="c.cvec")
+    return f"""
+      SELECT vec_id, s, cid, d2 FROM (
+        SELECT v.vec_id, v.s, c.cid, {d2} AS d2,
+               row_number() OVER (PARTITION BY v.vec_id, v.s
+                                  ORDER BY {d2}, c.cid) AS rn
+        FROM {vv} v JOIN {cent} c ON v.s = c.s
+      ) WHERE rn = 1"""
+
+
 def _pq_ctes(src: str = "embeddings") -> str:
     """Unrolled per-subspace Lloyd rounds as a CTE body (no WITH, no final
     SELECT) — the k-means oracle with a subspace key `s` carried through
@@ -1207,14 +1202,7 @@ def _pq_ctes(src: str = "embeddings") -> str:
     assignment = a{ITERS}; shared by the PQ-codes and IVF-PQ oracles."""
     parts = [
         f"""
-    vv AS (
-      SELECT e.vec_id, sp.s,
-             list_transform(list_slice(e.embedding,
-                                       sp.s * {_PQ_SUB} + 1,
-                                       sp.s * {_PQ_SUB} + {_PQ_SUB}),
-                            x -> CAST(x AS DOUBLE)) AS emb
-      FROM {src} e
-      CROSS JOIN (SELECT unnest(range(0, {_PQ_M})) AS s) sp
+    vv AS ({_pq_split_sql(src)}
     ),
     dd AS (
       SELECT vec_id, s, u.pos AS pos, u.val AS val
@@ -1231,20 +1219,10 @@ def _pq_ctes(src: str = "embeddings") -> str:
                        ORDER BY vec_id LIMIT {_PQ_K})
     )"""
     ]
-    d2 = (
-        "round(list_sum(list_transform(list_zip(v.emb, c.cvec), "
-        "p -> (p[1] - p[2]) * (p[1] - p[2]))), 9)"
-    )
     for i in range(1, _PQ_ITERS + 1):
         parts.append(
             f""",
-    a{i} AS (
-      SELECT vec_id, s, cid, d2 FROM (
-        SELECT v.vec_id, v.s, c.cid, {d2} AS d2,
-               row_number() OVER (PARTITION BY v.vec_id, v.s
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM vv v JOIN c{i-1} c ON v.s = c.s
-      ) WHERE rn = 1
+    a{i} AS ({_pq_encode_sql("vv", f"c{i-1}")}
     ),
     c{i} AS (
       SELECT p.s, p.cid, coalesce(m.cvec, p.cvec) AS cvec
@@ -1287,7 +1265,7 @@ def embedding_pq_codes(spark, sf_dir):
     kmeans_lloyd, M codebooks for the price of one. Per-round 6dp/9dp
     quantization makes the full trajectory (and thus the codes) carry a
     value-hash oracle."""
-    _, _, assign = _pq_train(spark, sf_dir)
+    _, assign = _pq_train(spark, sf_dir)
     return assign.groupBy("vec_id").agg(
         F.concat_ws(
             "|",
@@ -1304,65 +1282,63 @@ def embedding_pq_codes(spark, sf_dir):
     )
 
 
-def _pq_subvectors(spark, e):
-    """(vec_id, s, emb) sub-vector rows — the PQ subspace split, shared by
-    training and the round-6 delta-ingest encoder."""
-    sub = spark.range(_PQ_M).select(F.col("id").cast("int").alias("s"))
+def _pq_subvectors(v, vec: str):
+    """(keys..., s, emb): each ``v`` row's ``vec`` array split into its
+    _PQ_M double sub-vectors — shared by training, the frozen-codebook
+    encoder and the ADC lookup table."""
+    sub = v.sparkSession.range(_PQ_M).select(F.col("id").cast("int").alias("s"))
+    keys = [c for c in v.columns if c != vec]
+    return v.crossJoin(F.broadcast(sub)).select(
+        *keys,
+        "s",
+        F.transform(
+            F.slice(vec, F.col("s") * _PQ_SUB + 1, _PQ_SUB),
+            lambda x: x.cast("double"),
+        ).alias("emb"),
+    )
+
+
+def _pq_encode(vv, cent):
+    """PQ encoding: each (vec_id, s, emb) sub-vector to its nearest (s,
+    cid, cvec) codeword — 9dp squared L2, ties to the smaller cid, via
+    broadcast codebook + map-side min_by on the (d2, cid) struct (no
+    per-(vec, subspace) sort exchange). Returns (vec_id, s, cid, d2)."""
     return (
-        e.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("emb64"),
-        )
-        .crossJoin(F.broadcast(sub))
+        vv.join(F.broadcast(cent), "s")
         .select(
-            "vec_id",
-            "s",
-            F.slice("emb64", F.col("s") * _PQ_SUB + 1, _PQ_SUB).alias("emb"),
+            "vec_id", "s", "cid",
+            F.round(_l2sq(F.col("emb"), F.col("cvec")), 9).alias("d2"),
+        )
+        .groupBy("vec_id", "s")
+        .agg(F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("m"))
+        .select(
+            "vec_id", "s", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2")
         )
     )
 
 
 def _pq_train(spark, sf_dir, src=None):
-    """Shared PQ training dataflow: returns (vv sub-vectors, final (s, cid)
-    codebook, final (vec_id, s, cid, d2) assignment) after the fixed Lloyd
-    rounds — consumed by embedding_pq_codes and ivf_pq_topk. `src`
-    (round 6) trains on a base slice instead of the full table — the
-    delta-ingest op freezes codebooks trained this way."""
+    """Shared PQ training dataflow: returns (final (s, cid, cvec) codebook,
+    final (vec_id, s, cid, d2) assignment) after the fixed Lloyd rounds —
+    consumed by embedding_pq_codes and the IVF-PQ index. `src` (round 6)
+    trains on a base slice instead of the full table — the delta-ingest op
+    freezes codebooks trained this way."""
 
     e = src if src is not None else T(spark, sf_dir, "embeddings")
     # r8 perf (r7 verdict #7): same loop-scoped caching as _kmeans_train —
-    # the sub-vector split and its narrow posexplode feed every Lloyd
-    # round; persist for the loop, release once the final assignment is
-    # materialized (the returned vv recomputes lazily for the one consumer
-    # that uses it post-training, exactly as before).
-    vv = _pq_subvectors(spark, e).persist()
+    # the sub-vector split feeds every Lloyd round; persist for the loop,
+    # release once the final assignment is materialized.
+    vv = _pq_subvectors(e.select("vec_id", "embedding"), "embedding").persist()
     seeds = e.orderBy("vec_id").limit(_PQ_K).select("vec_id")
     cent = vv.join(F.broadcast(seeds), "vec_id").select(
         "s", F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
     )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("emb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
     assign = None
     for _ in range(_PQ_ITERS):
-        scored = vv.join(F.broadcast(cent), "s").select(
-            "vec_id", "s", "cid", d2.alias("d2")
-        )
         # assign carries NO cross-round state (next round scores from vv +
         # cent only), so it is not checkpointed per round — each barrier
         # was a full extra job; only the tiny cent table pins the lineage.
-        # min_by on the (d2, cid) struct = the old row_number ordering with
-        # no per-(vec,subspace) sort exchange (see _kmeans_train).
-        assign = (
-            scored.groupBy("vec_id", "s")
-            .agg(F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("m"))
-            .select("vec_id", "s", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
-        )
+        assign = _pq_encode(vv, cent)
         # one-pass centroid update (see _kmeans_train r8 note): _PQ_SUB
         # per-dimension avg expressions in a single (s, cid) aggregation —
         # one shuffle, no x{sub} posexplode; 6dp(+1e-12) per dimension
@@ -1387,7 +1363,40 @@ def _pq_train(spark, sf_dir, src=None):
     # final assignment IS consumed repeatedly downstream — checkpoint once
     assign = assign.localCheckpoint()
     vv.unpersist(False)
-    return vv, cent, assign
+    return cent, assign
+
+
+def _pq_lut(q, vec: str, codebook):
+    """ADC lookup table (keys..., s, cid, pd2): 9dp squared L2 from each
+    query's ``vec`` sub-vectors to every codeword of their subspace —
+    queries × M × K rows."""
+    keys = [c for c in q.columns if c != vec]
+    return (
+        _pq_subvectors(q, vec)
+        .join(codebook, "s")
+        .select(
+            *keys, "s", "cid",
+            F.round(_l2sq(F.col("emb"), F.col("cvec")), 9).alias("pd2"),
+        )
+    )
+
+
+def _pq_adc(cands, codes, lut):
+    """Asymmetric-distance scoring: each candidate (keys..., neighbor_id)
+    scores the 8dp sum of its M code lookups in the broadcast ``lut`` — no
+    candidate vector is touched. The only corpus-sized exchange is the
+    codes join keyed on the neighbor id. Returns (keys..., neighbor_id,
+    adc_d2)."""
+    keys = [c for c in lut.columns if c not in ("s", "cid", "pd2")]
+    return (
+        cands.join(
+            codes.select(F.col("vec_id").alias("neighbor_id"), "s", "cid"),
+            "neighbor_id",
+        )
+        .join(F.broadcast(lut), [*keys, "s", "cid"])
+        .groupBy(*keys, "neighbor_id")
+        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
+    )
 
 
 embedding_pq_codes.__doc__ = (
@@ -1490,31 +1499,16 @@ def knn_mmr_rerank(spark, sf_dir):
     quantized to 6dp (argmax inputs to 9dp), localCheckpoint-ed, and reused
     every step — which is also what pins the greedy trajectory across
     engines for the unrolled DuckDB oracle."""
-    from pyspark.sql import Window as W
-
-    e = T(spark, sf_dir, "embeddings").withColumn(
-        "nrm", F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    rel = F.round(
-        dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
-        + F.lit(1e-9),
-        6,
-    )
-    wq = W.partitionBy("qid")
+    q, c = _cos_sides(T(spark, sf_dir, "embeddings"))
+    wq = Window.partitionBy("qid")
     cand = (
-        F.broadcast(q)
-        .join(c, F.col("cid") != F.col("qid"))
-        .select("qid", "cid", rel.alias("rel"))
+        F.broadcast(q.filter(F.col("query_id") < N_QUERIES))
+        .join(c, F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            F.col("query_id").alias("qid"),
+            F.col("neighbor_id").alias("cid"),
+            F.round(_cos_qc() + F.lit(1e-9), 6).alias("rel"),
+        )
         .withColumn(
             "rn", F.row_number().over(wq.orderBy(F.desc("rel"), F.col("cid")))
         )
@@ -1522,22 +1516,19 @@ def knn_mmr_rerank(spark, sf_dir):
         .select("qid", "cid", "rel")
         .localCheckpoint()
     )
-    ea = e.select(F.col("vec_id").alias("ca"), F.col("embedding").alias("xa"),
-                  F.col("nrm").alias("na"))
-    eb = e.select(F.col("vec_id").alias("cb"), F.col("embedding").alias("xb"),
-                  F.col("nrm").alias("nb"))
-    s = F.round(
-        dot_fold(F.col("xa"), F.col("xb")) / (F.col("na") * F.col("nb"))
-        + F.lit(1e-9),
-        6,
-    )
+    # pairwise candidate sims: ca on the query side, cb on the candidate side
     sim = (
-        cand.select("qid", F.col("cid").alias("ca"))
-        .join(cand.select("qid", F.col("cid").alias("cb")), "qid")
-        .filter(F.col("ca") != F.col("cb"))
-        .join(ea, "ca")
-        .join(eb, "cb")
-        .select("qid", "ca", "cb", s.alias("s"))
+        cand.select("qid", F.col("cid").alias("query_id"))
+        .join(cand.select("qid", F.col("cid").alias("neighbor_id")), "qid")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .join(q, "query_id")
+        .join(c, "neighbor_id")
+        .select(
+            "qid",
+            F.col("query_id").alias("ca"),
+            F.col("neighbor_id").alias("cb"),
+            F.round(_cos_qc() + F.lit(1e-9), 6).alias("s"),
+        )
         .localCheckpoint()
     )
     sel = (
@@ -1590,80 +1581,17 @@ knn_mmr_rerank.__doc__ = (
 # ---- IVF-PQ: coarse routing + asymmetric-distance scoring ----------------
 
 
-# Shared oracle SQL fragments (single source — a determinism fix here must
-# reach every consumer, incl. retrieval's indexed-RRF oracle):
-_SUB_D2_SQL = (
-    "round(list_sum(list_transform(list_zip(q.emb, c.cvec), "
-    "p -> (p[1] - p[2]) * (p[1] - p[2]))), 9)"
-)
-_FULL_D2_SQL = (
-    "list_sum(list_transform(list_zip({a}, {b}), "
-    "p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-    " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-)
-
-
-def _coarse_ctes(cent_src: str = "embeddings") -> str:
-    """dims/centroids/cvl/assigned CTE bodies (no WITH) — the label-mean
-    coarse router replay (6dp centroid quantization before any routing
-    argmin), shared by _ivf_pq_oracle, retrieval's indexed-RRF oracle and
-    the merge-compact oracle. `cent_src` trains the centroids on a slice
-    (frozen-router compaction) while assignment always routes the full
-    corpus."""
-    return f"""
-    dims AS (
-      SELECT label, u.pos AS pos, u.val AS val
-      FROM (
-        SELECT label,
-               unnest(list_transform(range(1, len(embedding) + 1),
-                      i -> {{'pos': i, 'val': CAST(embedding[i] AS DOUBLE)}})) AS u
-        FROM {cent_src}
-      )
-    ),
-    centroids AS (
-      SELECT label, pos, round(avg(val) + 1e-12, 6) AS c FROM dims GROUP BY label, pos
-    ),
-    cvl AS (
-      SELECT label AS c_label, list(c ORDER BY pos) AS cvec
-      FROM centroids GROUP BY label
-    ),
-    assigned AS (
-      SELECT vec_id,
-             arg_min(c_label,
-                     {_FULL_D2_SQL.format(a='embedding', b='cvec')}
-                     + c_label * 1e-12) AS c_label
-      FROM embeddings CROSS JOIN cvl
-      GROUP BY vec_id
-    )"""
-
-
 def _ivf_pq_oracle() -> str:
-    sub_d2 = _SUB_D2_SQL
-    full_d2 = _FULL_D2_SQL
     return f"""
     WITH {_pq_ctes()},
     {_coarse_ctes()},
-    probes AS (
-      SELECT vec_id AS query_id, c_label FROM (
-        SELECT e.vec_id, c.c_label,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {full_d2.format(a='e.embedding', b='c.cvec')}
-                          + c.c_label * 1e-12) AS rk
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) e
-        CROSS JOIN cvl c
-      ) WHERE rk <= {_IVF_PROBE}
-    ),
-    cands AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assigned a USING (c_label)
-      WHERE a.vec_id <> p.query_id
-    ),
+    {_probe_ctes(_IVF_PROBE)},
     qsub AS (
       SELECT vec_id AS query_id, s, emb FROM vv WHERE vec_id < {N_QUERIES}
     ),
     lut AS (
-      SELECT q.query_id, c.s, c.cid, {sub_d2} AS pd2
+      SELECT q.query_id, c.s, c.cid,
+             {_SUB_D2_SQL.format(a='q.emb', b='c.cvec')} AS pd2
       FROM qsub q JOIN c{_PQ_ITERS} c ON q.s = c.s
     ),
     adc AS (
@@ -1701,87 +1629,21 @@ def ivf_pq_topk(spark, sf_dir):
     to their codes (shuffle keyed on neighbor id) plus {M} broadcast-hash
     lookups, then a per-query top-K window. Everything is quantized
     (9dp partials, 8dp sums) so ranks are engine-stable."""
-    from pyspark.sql import Window
+    return _ivf_pq_search(
+        _queries(T(spark, sf_dir, "embeddings")),
+        *_ivf_pq_index_frames(spark, sf_dir),
+    )
 
-    vv, cent, assign = _pq_train(spark, sf_dir)
-    e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        # 6dp + epsilon shift BEFORE any routing distance/argmin — the
-        # repo-wide discipline: cross-engine/run summation-order noise in
-        # the mean must not flip near-tie coarse assignments (ADVICE r4).
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvl = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    tiebreak = F.col("d2") + F.col("c_label") * 1e-12
-    assigned = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(cvl))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min_by("c_label", tiebreak).alias("c_label"))
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(tiebreak)
-    probes = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .join(F.broadcast(cvl))
-        .select("query_id", "c_label", d2.alias("d2"))
-        .withColumn("rk", F.row_number().over(wprobe))
-        .filter(F.col("rk") <= _IVF_PROBE)
-        .select("query_id", "c_label")
-    )
-    cands = (
-        F.broadcast(probes)
-        .join(assigned, "c_label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    qsub = vv.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "s", F.col("emb").alias("qemb")
-    )
-    pd2 = F.round(
-        F.aggregate(
-            F.zip_with("qemb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    lut = qsub.join(cent, "s").select("query_id", "s", "cid", pd2.alias("pd2"))
-    codes = assign.select(
-        F.col("vec_id").alias("neighbor_id"), "s", "cid"
-    )
-    adc = (
-        cands.join(codes, "neighbor_id")
-        .join(F.broadcast(lut), ["query_id", "s", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
-    )
+
+def _ivf_pq_search(q, coarse, routing, codebook, codes):
+    """The one IVF-PQ search: queries (query_id, embedding) probe their
+    nprobe nearest ``coarse`` lists, candidates come from ``routing``, and
+    are ranked by PQ asymmetric distance over their ``codes`` against the
+    ``codebook`` LUT — per-query top-K window, neighbor_id tiebreak. Fed
+    the in-memory index (ivf_pq_topk) or the published one
+    (ivf_pq_search_topk)."""
+    cands = _probe_cands(_probes(q, coarse, _IVF_PROBE), routing)
+    adc = _pq_adc(cands, codes, _pq_lut(q, "embedding", codebook))
     w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
     return (
         adc.withColumn("rank", F.row_number().over(w))
@@ -1818,6 +1680,8 @@ _PQ_INDEX_VERSION = "r6"  # r6: versioned-dir + LATEST-pointer layout
 # time (sf0.1 build ≈ 3 s) yet short enough that crashed builds don't
 # accumulate across a day of rounds.
 _PQ_GC_STALE_SECONDS = 1800
+# the published index: one parquet table per _ivf_pq_index_frames artifact
+_PQ_INDEX_TABLES = ("coarse", "routing", "codebook", "codes")
 
 
 def _pq_index_dir(sf_dir: str) -> str:
@@ -1828,11 +1692,12 @@ def _pq_index_dir(sf_dir: str) -> str:
     streaming-state publish protocol) — a rebuild never deletes the dir a
     concurrent reader has already resolved."""
     import os
+    import tempfile
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
     return os.path.join(
-        "/tmp",
+        tempfile.gettempdir(),
         "hive_apache_ci_spark_index",
         f"ivfpq_{_PQ_INDEX_VERSION}_{tag}_{st.st_mtime_ns}_{st.st_size}",
     )
@@ -1842,55 +1707,11 @@ def _ivf_pq_index_frames(spark, sf_dir):
     """The four index artifacts as (unmaterialized) DataFrames:
     coarse (c_label, cvec), routing (vec_id, c_label),
     codebook (s, cid, cvec), codes (vec_id, s, cid)."""
-    _vv, cent, assign = _pq_train(spark, sf_dir)
+    cent, assign = _pq_train(spark, sf_dir)
     e = T(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    coarse = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-        # r12 optimization: coarse (|labels| rows) feeds BOTH its own
-        # parquet write and routing's broadcast join — without the
-        # checkpoint the full embeddings posexplode + two-shuffle centroid
-        # aggregation executes once per consumer (guide §2.4).
-        .localCheckpoint()
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    routing = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(coarse))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(
-            F.min_by("c_label", F.col("d2") + F.col("c_label") * 1e-12).alias(
-                "c_label"
-            )
-        )
-    )
-    codes = assign.select("vec_id", "s", "cid")
-    return coarse, routing, cent, codes
+    coarse = _label_centroids(e)
+    routing = _route(e.select("vec_id", "embedding"), coarse)
+    return coarse, routing, cent, assign.select("vec_id", "s", "cid")
 
 
 def _resolve_pq_index(root: str) -> str | None:
@@ -1921,7 +1742,6 @@ def _ensure_pq_index(spark, sf_dir: str, rebuild: bool = False) -> str:
     concurrent rebuild's last flip wins and all contents are deterministic,
     so every survivor is byte-equivalent."""
     import os
-    import shutil
     import uuid
 
     root = _pq_index_dir(sf_dir)
@@ -1930,30 +1750,32 @@ def _ensure_pq_index(spark, sf_dir: str, rebuild: bool = False) -> str:
         return live
     vname = "v_" + uuid.uuid4().hex
     vdir = os.path.join(root, vname)
-    coarse, routing, codebook, codes = _ivf_pq_index_frames(spark, sf_dir)
+    frames = _ivf_pq_index_frames(spark, sf_dir)
     # r12 optimization (guide §2.6 "overlap independent jobs"): the four
     # index writes share no lineage that still executes (cent/assign are
-    # localCheckpointed by _pq_train, coarse above), so submit them from a
-    # small thread pool — the tail tasks of one write back-fill cores the
-    # next would leave idle. FIFO scheduling keeps this deterministic;
-    # _SUCCESS is only written after every future resolves.
+    # localCheckpointed by _pq_train; coarse is cached below), so submit
+    # them from a small thread pool — the tail tasks of one write back-fill
+    # cores the next would leave idle. FIFO scheduling keeps this
+    # deterministic; _SUCCESS is only written after every future resolves.
+    # coarse (|labels| rows) feeds its own write AND routing's broadcast
+    # join: cached (not checkpointed — routing is already defined over it),
+    # the embeddings posexplode + two-shuffle centroid aggregation runs
+    # once, not once per consumer.
     from concurrent.futures import ThreadPoolExecutor
 
-    frames = (
-        ("coarse", coarse),
-        ("routing", routing),
-        ("codebook", codebook),
-        ("codes", codes),
-    )
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        list(
-            pool.map(
-                lambda nf: nf[1]
-                .write.mode("overwrite")
-                .parquet(os.path.join(vdir, nf[0])),
-                frames,
+    coarse = frames[0].persist()
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            list(
+                pool.map(
+                    lambda nf: nf[1]
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(vdir, nf[0])),
+                    zip(_PQ_INDEX_TABLES, frames),
+                )
             )
-        )
+    finally:
+        coarse.unpersist(False)
     open(os.path.join(vdir, "_SUCCESS"), "w").close()
     prev = _resolve_pq_index(root)  # re-resolve: racing builders may have flipped
     ptr = os.path.join(root, "LATEST")
@@ -2067,77 +1889,10 @@ def ivf_pq_search_topk(spark, sf_dir):
     index, same oracle)."""
     import os
 
-    from pyspark.sql import Window
-
     idx = _ensure_pq_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(idx, "coarse"))
-    routing = spark.read.parquet(os.path.join(idx, "routing"))
-    codebook = spark.read.parquet(os.path.join(idx, "codebook"))
-    codes = spark.read.parquet(os.path.join(idx, "codes"))
-    e = T(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("d2") + F.col("c_label") * 1e-12
-    )
-    probes = (
-        q.join(F.broadcast(coarse))
-        .select("query_id", "c_label", d2.alias("d2"))
-        .withColumn("rk", F.row_number().over(wprobe))
-        .filter(F.col("rk") <= _IVF_PROBE)
-        .select("query_id", "c_label")
-    )
-    cands = (
-        F.broadcast(probes)
-        .join(routing, "c_label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    sub = spark.range(_PQ_M).select(F.col("id").cast("int").alias("s"))
-    qsub = (
-        q.crossJoin(F.broadcast(sub))
-        .select(
-            "query_id",
-            "s",
-            F.transform(
-                F.slice("embedding", F.col("s") * _PQ_SUB + 1, _PQ_SUB),
-                lambda x: x.cast("double"),
-            ).alias("qemb"),
-        )
-    )
-    pd2 = F.round(
-        F.aggregate(
-            F.zip_with("qemb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    lut = qsub.join(codebook, "s").select("query_id", "s", "cid", pd2.alias("pd2"))
-    adc = (
-        cands.join(
-            codes.select(F.col("vec_id").alias("neighbor_id"), "s", "cid"),
-            "neighbor_id",
-        )
-        .join(F.broadcast(lut), ["query_id", "s", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("pd2") + F.lit(1e-12), 8).alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "adc_d2")
+    return _ivf_pq_search(
+        _queries(T(spark, sf_dir, "embeddings")),
+        *[spark.read.parquet(os.path.join(idx, t)) for t in _PQ_INDEX_TABLES],
     )
 
 
@@ -2245,30 +2000,17 @@ def dedup_semdedup_clusters(spark, sf_dir):
     trajectories are quantized per round, so the WHOLE operator —
     clustering included — carries a value-hash oracle."""
     cent, assign = _kmeans_train(spark, sf_dir)
-    e = T(spark, sf_dir, "embeddings")
+    q, c = _cos_sides(T(spark, sf_dir, "embeddings"))
     a = assign.select("vec_id", "cid")
-    pa = a.select(F.col("vec_id").alias("va"), "cid")
-    pb = a.select(F.col("vec_id").alias("vb"), "cid")
-    pairs = pa.join(pb, "cid").filter(F.col("va") != F.col("vb"))
-    withnorm = e.withColumn(
-        "nrm", F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
-    )
-    ea = withnorm.select(
-        F.col("vec_id").alias("va"),
-        F.col("embedding").alias("xa"),
-        F.col("nrm").alias("na"),
-    )
-    eb = withnorm.select(
-        F.col("vec_id").alias("vb"),
-        F.col("embedding").alias("xb"),
-        F.col("nrm").alias("nb"),
-    )
-    sim = dot_fold(F.col("xa"), F.col("xb")) / (F.col("na") * F.col("nb"))
+    pa = a.select(F.col("vec_id").alias("query_id"), "cid")
+    pb = a.select(F.col("vec_id").alias("neighbor_id"), "cid")
     close = (
-        pairs.join(ea, "va")
-        .join(eb, "vb")
-        .filter(F.round(sim + F.lit(1e-9), 6) > F.lit(_SEMDEDUP_TH))
-        .select("va", "vb")
+        pa.join(pb, "cid")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .join(q, "query_id")
+        .join(c, "neighbor_id")
+        .filter(F.round(_cos_qc() + F.lit(1e-9), 6) > F.lit(_SEMDEDUP_TH))
+        .select(F.col("query_id").alias("va"), F.col("neighbor_id").alias("vb"))
     )
     s = close.groupBy("va").agg(
         F.count(F.lit(1)).alias("n_close"), F.min("vb").alias("min_nbr")
@@ -2407,43 +2149,12 @@ _MRL_DIMS = (16, 32)  # prefix lengths evaluated against the 64-dim truth
 
 def _knn_trunc(spark, sf_dir, d: int):
     """Brute-force top-k by cosine over the FIRST d dims only (matryoshka
-    prefix): same dataflow as knn_topk_cosine with the embedding sliced
-    before any arithmetic — norms are prefix norms."""
-    from pyspark.sql import Window
-
+    prefix): the knn_topk_cosine dataflow with the embedding sliced before
+    any arithmetic — norms are prefix norms. Returns the id pairs."""
     e = T(spark, sf_dir, "embeddings").select(
-        "vec_id", F.slice("embedding", 1, d).alias("emb")
+        "vec_id", F.slice("embedding", 1, d).alias("embedding")
     )
-    e = e.withColumn("nrm", F.sqrt(dot_fold(F.col("emb"), F.col("emb"))))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("emb").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    sims = (
-        F.broadcast(q)
-        .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "sim_raw"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    return _knn_exact(e).select("query_id", "neighbor_id")
 
 
 def _knn_trunc_sql(d: int) -> str:
@@ -2601,76 +2312,59 @@ _INGEST_BUCKET_SQL = (
 )
 
 
-def _ingest_split(e):
-    """(base, delta) corpus split by md5(vec_id) decimal bucket — the
-    deterministic stand-in for 'yesterday's corpus vs today's ingest
-    batch', shared by ivf_pq_ingest_delta and ivf_pq_retrain_decision."""
-    bucket = (
+def _ingest_bucket():
+    """md5(vec_id) decimal bucket, mirrored by _INGEST_BUCKET_SQL."""
+    return (
         F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
         .cast("bigint")
         % 10
     )
-    tagged = e.withColumn("bk", bucket)
+
+
+def _ingest_split(e):
+    """(base, delta) corpus split by md5(vec_id) decimal bucket — the
+    deterministic stand-in for 'yesterday's corpus vs today's ingest
+    batch'."""
+    tagged = e.withColumn("bk", _ingest_bucket())
     return (
         tagged.filter(F.col("bk") < _INGEST_SPLIT).drop("bk"),
         tagged.filter(F.col("bk") >= _INGEST_SPLIT).drop("bk"),
     )
 
 
-def _encode_frozen(spark, batch, cent):
-    """Encode a batch against a FROZEN codebook: per-subspace nearest-
-    codeword argmin via broadcast cent + map-side min_by — encode cost is
-    ∝ batch, never corpus. Returns (vec_id, s, cid, d2)."""
-    dvv = _pq_subvectors(spark, batch)
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("emb", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
-    return (
-        dvv.join(F.broadcast(cent), "s")
-        .select("vec_id", "s", "cid", d2.alias("d2"))
-        .groupBy("vec_id", "s")
-        .agg(F.min_by(F.struct("cid", "d2"), F.struct("d2", "cid")).alias("m"))
-        .select(
-            "vec_id", "s", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2")
-        )
-    )
+def _frozen_ingest(spark, sf_dir):
+    """(codebook, base assignment, delta assignment): codebooks trained on
+    the base slice and FROZEN, the delta batch encoded against them —
+    encode cost is ∝ batch, never corpus. Shared by ivf_pq_ingest_delta
+    and ivf_pq_retrain_decision."""
+    base, delta = _ingest_split(T(spark, sf_dir, "embeddings"))
+    cent, base_assign = _pq_train(spark, sf_dir, src=base)
+    dvv = _pq_subvectors(delta.select("vec_id", "embedding"), "embedding")
+    return cent, base_assign, _pq_encode(dvv, cent)
 
 
-def _ingest_delta_oracle() -> str:
-    d2 = (
-        "round(list_sum(list_transform(list_zip(v.emb, c.cvec), "
-        "p -> (p[1] - p[2]) * (p[1] - p[2]))), 9)"
-    )
+def _ingest_ctes() -> str:
+    """CTE bodies (no WITH) for the frozen-codebook ingest oracles: PQ
+    training on the base slice (its final c/a CTEs) and the delta batch
+    encoded against the final codebook (dassign) — the SQL mirror of
+    _frozen_ingest."""
     return f"""
-    WITH base_embeddings AS (
+    base_embeddings AS (
       SELECT * FROM embeddings WHERE {_INGEST_BUCKET_SQL} < {_INGEST_SPLIT}
     ),
     {_pq_ctes(src="base_embeddings")},
     delta AS (
       SELECT * FROM embeddings WHERE {_INGEST_BUCKET_SQL} >= {_INGEST_SPLIT}
     ),
-    dvv AS (
-      SELECT e.vec_id, sp.s,
-             list_transform(list_slice(e.embedding,
-                                       sp.s * {_PQ_SUB} + 1,
-                                       sp.s * {_PQ_SUB} + {_PQ_SUB}),
-                            x -> CAST(x AS DOUBLE)) AS emb
-      FROM delta e
-      CROSS JOIN (SELECT unnest(range(0, {_PQ_M})) AS s) sp
+    dvv AS ({_pq_split_sql("delta")}
     ),
-    dassign AS (
-      SELECT vec_id, s, cid, d2 FROM (
-        SELECT v.vec_id, v.s, c.cid, {d2} AS d2,
-               row_number() OVER (PARTITION BY v.vec_id, v.s
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM dvv v JOIN c{_PQ_ITERS} c ON v.s = c.s
-      ) WHERE rn = 1
-    ),
+    dassign AS ({_pq_encode_sql("dvv", f"c{_PQ_ITERS}")}
+    )"""
+
+
+def _ingest_delta_oracle() -> str:
+    return f"""
+    WITH {_ingest_ctes()},
     nb AS (SELECT s, cid, count(*) AS n_base FROM a{_PQ_ITERS} GROUP BY s, cid),
     nd AS (SELECT s, cid, count(*) AS n_delta,
                   round(sum(d2) + 1e-9, 4) AS delta_err
@@ -2706,10 +2400,7 @@ def ivf_pq_ingest_delta(spark, sf_dir):
     the M×K codebook), never the corpus; the oracle replays the frozen
     training on the identical base slice, so a codebook that silently
     retrained on delta data would hash-mismatch."""
-    e = T(spark, sf_dir, "embeddings")
-    base, delta = _ingest_split(e)
-    _, cent, base_assign = _pq_train(spark, sf_dir, src=base)
-    dassign = _encode_frozen(spark, delta, cent)
+    cent, base_assign, dassign = _frozen_ingest(spark, sf_dir)
     nb = base_assign.groupBy("s", "cid").agg(F.count(F.lit(1)).alias("n_base"))
     nd = dassign.groupBy("s", "cid").agg(
         F.count(F.lit(1)).alias("n_delta"),
@@ -2739,35 +2430,8 @@ _RETRAIN_OCC_SHARE = 0.5   # a codeword holding >2x the uniform 1/K share
 
 
 def _retrain_decision_oracle() -> str:
-    d2 = (
-        "round(list_sum(list_transform(list_zip(v.emb, c.cvec), "
-        "p -> (p[1] - p[2]) * (p[1] - p[2]))), 9)"
-    )
     return f"""
-    WITH base_embeddings AS (
-      SELECT * FROM embeddings WHERE {_INGEST_BUCKET_SQL} < {_INGEST_SPLIT}
-    ),
-    {_pq_ctes(src="base_embeddings")},
-    delta AS (
-      SELECT * FROM embeddings WHERE {_INGEST_BUCKET_SQL} >= {_INGEST_SPLIT}
-    ),
-    dvv AS (
-      SELECT e.vec_id, sp.s,
-             list_transform(list_slice(e.embedding,
-                                       sp.s * {_PQ_SUB} + 1,
-                                       sp.s * {_PQ_SUB} + {_PQ_SUB}),
-                            x -> CAST(x AS DOUBLE)) AS emb
-      FROM delta e
-      CROSS JOIN (SELECT unnest(range(0, {_PQ_M})) AS s) sp
-    ),
-    dassign AS (
-      SELECT vec_id, s, cid, d2 FROM (
-        SELECT v.vec_id, v.s, c.cid, {d2} AS d2,
-               row_number() OVER (PARTITION BY v.vec_id, v.s
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM dvv v JOIN c{_PQ_ITERS} c ON v.s = c.s
-      ) WHERE rn = 1
-    ),
+    WITH {_ingest_ctes()},
     nb AS (SELECT s, cid, count(*) AS n_base,
                   round(sum(d2) + 1e-9, 4) AS base_err
            FROM a{_PQ_ITERS} GROUP BY s, cid),
@@ -2860,10 +2524,7 @@ def ivf_pq_retrain_decision(spark, sf_dir):
     ratios divide identically-rounded inputs (6dp means, 4dp sums) in the
     same op order both engines, so the verdict booleans hash-oracle
     cleanly."""
-    e = T(spark, sf_dir, "embeddings")
-    base, delta = _ingest_split(e)
-    _, cent, base_assign = _pq_train(spark, sf_dir, src=base)
-    dassign = _encode_frozen(spark, delta, cent)
+    cent, base_assign, dassign = _frozen_ingest(spark, sf_dir)
     nb = base_assign.groupBy("s", "cid").agg(
         F.count(F.lit(1)).alias("n_base"),
         F.round(F.sum("d2") + F.lit(1e-9), 4).alias("base_err"),
@@ -3029,49 +2690,8 @@ def ivf_pq_merge_compact(spark, sf_dir):
     sorting: content equality reduces to an O(1) comparison per list."""
     e = T(spark, sf_dir, "embeddings")
     base, _delta = _ingest_split(e)
-    dims = base.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvl = (
-        centroids.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-        .select(F.col("label").alias("c_label"), "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    tiebreak = F.col("d2") + F.col("c_label") * 1e-12
-    assigned = (
-        e.select("vec_id", "embedding")
-        .join(F.broadcast(cvl))
-        .select("vec_id", "c_label", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min_by("c_label", tiebreak).alias("c_label"))
-    )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 10
-    )
-    tag = e.select("vec_id", bucket.alias("bk"))
+    assigned = _route(e.select("vec_id", "embedding"), _label_centroids(base))
+    tag = e.select("vec_id", _ingest_bucket().alias("bk"))
     h32 = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -3139,25 +2759,9 @@ def ann_filtered_topk(spark, sf_dir):
     layout applied to vectors). Queries stay broadcast; ranking is a
     per-query window over one label's candidates with vec_id tiebreak,
     never a global sort."""
-    from pyspark.sql import Window
-
-    e = T(spark, sf_dir, "embeddings").withColumn(
-        "nrm", F.sqrt(dot_fold(F.col("embedding"), F.col("embedding")))
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("clabel"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
+    q, c = _cos_sides(T(spark, sf_dir, "embeddings"), "label")
     sims = (
-        F.broadcast(q)
+        F.broadcast(q.filter(F.col("query_id") < N_QUERIES))
         .join(
             c,
             (F.col("clabel") == F.col("qlabel"))
@@ -3167,25 +2771,10 @@ def ann_filtered_topk(spark, sf_dir):
             "query_id",
             F.col("qlabel").alias("label"),
             "neighbor_id",
-            (
-                dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
-            ).alias("sim_raw"),
+            _cos_qc().alias("sim_raw"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _FILT_TOPK)
-        .select(
-            "query_id",
-            "label",
-            "neighbor_id",
-            "rank",
-            F.round("sim_raw", 6).alias("sim"),
-        )
-    )
+    return _topk(sims, _FILT_TOPK)
 
 
 ann_filtered_topk.__doc__ = ann_filtered_topk.__doc__.replace(
@@ -3227,14 +2816,8 @@ def ann_range_search(spark, sf_dir):
     probed lists, never corpus); the radius variant returns an unbounded-
     per-query result by SEMANTICS, so downstream consumers paginate on
     (query_id, rank) rather than collecting."""
-    from pyspark.sql import Window
-
-    sims = _ivf_candidate_sims(spark, sf_dir, _IVF_PROBE)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_raw").desc(), F.col("neighbor_id")
-    )
     return (
-        sims.withColumn("rank", F.row_number().over(w))
+        _rank_by_sim(_ivf_candidate_sims(spark, sf_dir, _IVF_PROBE))
         .withColumn("sim", F.round(F.col("sim_raw") + F.lit(1e-9), 6))
         .filter(F.col("sim") >= _RANGE_R)
         .select("query_id", "neighbor_id", "rank", "sim")

@@ -584,44 +584,20 @@ def _heldout_centroid_scores(spark, sf_dir):
     quality_uncertainty_pick): 6dp-quantized per-label centroids fit on
     the 80% split, every held-out vector scored against the broadcast
     10-row centroid table. Returns (vec_id, label, c_label, score)."""
+    from .similarity import _label_centroids, dot_fold
+
     e = T(spark, sf_dir, "embeddings")
     tr = e.filter(F.col("vec_id") % 5 != 0)
     te = e.filter(F.col("vec_id") % 5 == 0)
-    dims = tr.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos0", "val_f")
-    ).select(
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.col("val_f").cast("double").alias("val"),
-    )
-    centroids = dims.groupBy("label", "pos").agg(
-        F.round(F.avg("val") + F.lit(1e-12), 6).alias("c")
-    )
-    cvec = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "c"))),
-        lambda s: s.getField("c"),
-    )
-    cvecs = (
-        centroids.groupBy("label")
-        .agg(cvec.alias("cvec"))
-        .select(
-            F.col("label").alias("c_label"),
-            "cvec",
-            F.sqrt(
-                F.aggregate("cvec", F.lit(0.0), lambda acc, x: acc + x * x)
-            ).alias("cnorm"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with("embedding", "cvec", lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    cvecs = _label_centroids(tr).withColumn(
+        "cnorm",
+        F.sqrt(F.aggregate("cvec", F.lit(0.0), lambda acc, x: acc + x * x)),
     )
     return te.crossJoin(F.broadcast(cvecs)).select(
         "vec_id",
         "label",
         "c_label",
-        (dot / F.col("cnorm")).alias("score"),
+        (dot_fold(F.col("embedding"), F.col("cvec")) / F.col("cnorm")).alias("score"),
     )
 
 
@@ -804,6 +780,8 @@ def train_kfold_cv(spark, sf_dir):
     aggregates |folds| accuracy cells. No corpus-sized shuffle, no
     per-fold recomputation. Centroids 6dp-quantized before any dot
     product and argmax ties epsilon-broken (repo discipline)."""
+    from .similarity import _by_pos, dot_fold
+
     e = T(spark, sf_dir, "embeddings").withColumn(
         "fold", F.col("vec_id") % 5
     )
@@ -831,13 +809,9 @@ def train_kfold_cv(spark, sf_dir):
             6,
         ).alias("c"),
     )
-    cvec = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "c"))),
-        lambda s: s.getField("c"),
-    )
     cvecs = (
         cent.groupBy("fold", "label")
-        .agg(cvec.alias("cvec"))
+        .agg(_by_pos("c").alias("cvec"))
         .select(
             F.col("fold").alias("c_fold"),
             F.col("label").alias("c_label"),
@@ -847,11 +821,7 @@ def train_kfold_cv(spark, sf_dir):
             ).alias("cnorm"),
         )
     )
-    dot = F.aggregate(
-        F.zip_with("embedding", "cvec", lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = dot_fold(F.col("embedding"), F.col("cvec"))
     scored = e.join(
         F.broadcast(cvecs), e.fold == cvecs.c_fold
     ).select(

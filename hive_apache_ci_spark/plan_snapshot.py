@@ -46,6 +46,9 @@ SNAPSHOT_QUERIES = (
     "sort_topk",
     "dedup_minhash_lsh",
     "knn_topk_cosine",
+    # the LSH and IVF candidate paths over the shared exact-cosine kernel
+    "knn_lsh_topk",
+    "ivf_probe_topk",
     "search_bm25_topk",
     "text_quality_score",
     "tpcds_q5_channel_rollup",

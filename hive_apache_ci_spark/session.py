@@ -10,8 +10,13 @@ Scale posture (100 TB north star): everything here is a *session* default
 that also makes sense on a 1000-executor cluster — AQE on (runtime join
 conversion, skew-join splitting, partition coalescing), broadcast threshold
 sized for dimension tables, shuffle partitions tuned per deployment (32 for
-the local[32] test rig; a real cluster overrides via ``extra_conf`` or
-spark-defaults).
+the local[32] test rig; a real cluster overrides via ``extra_conf``).
+
+``RUNTIME_CONFS`` are re-applied to every session the catalog reads through
+(spark-defaults cannot override them). ``get_spark(extra_conf=...)`` is the
+override: its values for those keys win for the session's lifetime,
+including every later ``catalog.load_table``, until the next ``get_spark``
+call on the same application replaces them.
 """
 
 from __future__ import annotations
@@ -84,6 +89,9 @@ BUILD_CONFS: dict[str, str] = {
 
 
 _CONFS_APPLIED: set[str] = set()
+# applicationId -> the RUNTIME_CONFS keys the latest get_spark(extra_conf=)
+# overrode for that application
+_OVERRIDES: dict[str, dict[str, str]] = {}
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -97,20 +105,23 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     calls this on every table load. The short-circuit re-verifies ONE
     sentinel conf first: sibling sessions of the same application (e.g.
     ``spark.newSession()``) share the applicationId but carry their own
-    SQLConf, so the cache alone would silently skip them.
+    SQLConf, so the cache alone would silently skip them. Values a
+    ``get_spark(extra_conf=...)`` call overrode for this application win
+    over ``RUNTIME_CONFS``.
     """
     try:
         key_id = spark.sparkContext.applicationId
     except Exception:
         key_id = None
+    confs = {**RUNTIME_CONFS, **_OVERRIDES.get(key_id, {})}
     if key_id is not None and key_id in _CONFS_APPLIED:
         try:
             sentinel = spark.conf.get("spark.sql.session.timeZone", None)
         except Exception:
             sentinel = None
-        if sentinel == RUNTIME_CONFS["spark.sql.session.timeZone"]:
+        if sentinel == confs["spark.sql.session.timeZone"]:
             return spark
-    for key, value in RUNTIME_CONFS.items():
+    for key, value in confs.items():
         try:
             spark.conf.set(key, value)
         except Exception:
@@ -130,7 +141,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default ``*``)
     for the test rig; on a real cluster pass ``None`` after setting the
-    master in spark-submit / spark-defaults.
+    master in spark-submit / spark-defaults. ``extra_conf`` values win over
+    ``BUILD_CONFS`` and ``RUNTIME_CONFS`` (see the module docstring).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -142,4 +154,9 @@ def get_spark(
         for key, value in extra_conf.items():
             builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    app_id = spark.sparkContext.applicationId
+    _OVERRIDES[app_id] = {
+        k: v for k, v in (extra_conf or {}).items() if k in RUNTIME_CONFS
+    }
+    _CONFS_APPLIED.discard(app_id)
     return apply_runtime_confs(spark)

@@ -226,3 +226,29 @@ def test_sibling_session_gets_runtime_confs(spark):
     apply_runtime_confs(sib)
     assert sib.conf.get("spark.sql.session.timeZone") == "UTC"
     assert sib.conf.get("spark.sql.ansi.enabled") == "false"
+
+
+def test_get_spark_extra_conf_overrides_runtime_confs(spark, monkeypatch):
+    """get_spark(extra_conf=...) is how a deployment overrides RUNTIME_CONFS:
+    its values must survive the confs get_spark and catalog.load_table
+    re-apply, and a plain get_spark() call restores the defaults. The
+    emptied apply cache stands in for a fresh application, whose first
+    apply_runtime_confs is never short-circuited."""
+    from hive_apache_ci_spark import session
+
+    from .conftest import SF_DIR
+
+    monkeypatch.setattr(session, "_CONFS_APPLIED", set())
+    extra = {
+        "spark.sql.shuffle.partitions": "200",
+        "spark.sql.files.maxPartitionBytes": "134217728",
+    }
+    try:
+        s = session.get_spark("pytest", extra_conf=extra)
+        load_table(s, SF_DIR, "embeddings")
+        for key, value in extra.items():
+            assert s.conf.get(key) == value, key
+    finally:
+        session.get_spark("pytest")
+    for key in extra:
+        assert spark.conf.get(key) == session.RUNTIME_CONFS[key], key

@@ -35,6 +35,17 @@ def test_gc_reaps_only_stale_foreign_runs(tmp_path, monkeypatch):
     assert fresh.exists() and ours.exists() and legacy.exists()
 
 
+def test_pq_index_dir_follows_tempdir(tmp_path, monkeypatch):
+    """The IVF-PQ index root lives under tempfile.gettempdir() (honours
+    TMPDIR) like every other scratch path, not a hard-coded directory."""
+    from hive_apache_ci_spark.pipeline.similarity import _pq_index_dir
+
+    from .conftest import SF_DIR
+
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
+    assert _pq_index_dir(SF_DIR).startswith(str(tmp_path) + os.sep)
+
+
 def test_committed_gates_on_success_marker(tmp_path):
     d = tmp_path / "out"
     d.mkdir()
